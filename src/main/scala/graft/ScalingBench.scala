@@ -329,7 +329,7 @@ object ScalingBench {
       graft.kernels.PageRankArray.run(edges, verts, iters = 1).count() // warmup
       val t0 = System.nanoTime()
       val blocks = graft.kernels.BlockBuild.csrValBlocks(edgesNorm, bs,
-          Seq(col("rb"), pmod(col("cb"), lit(2))))
+          Seq(col("rb"), pmod(col("cb"), lit(2)))).rdd
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       blocks.count()
       val t1 = System.nanoTime()
@@ -341,13 +341,6 @@ object ScalingBench {
       val iterSec = (t2 - t1) / 1e9 / iters
       val (phB, phJ, phD) = graft.kernels.PageRankArray.lastPhases
       emit(f"""{"metric":"pagerank_eps","value":${nnz / iterSec}%.0f,"unit":"edges/sec","mode":"array","build_sec":$buildSec%.2f,"iter_sec":$iterSec%.3f,"iters":$iters,"bcast_sec":$phB%.2f,"job_sec":$phJ%.2f,"driver_sec":$phD%.2f,"scale":$scale,"nnz":$nnz,"cpus":$cpus,"parts":$parts}""")
-    } else if (mode == "blocked") {
-      val bs = 1 << math.max(10, scale - 3) // ~8x8 block grid
-      graft.kernels.PageRankBlocked.run(edges, verts, bs, 1).count() // warmup
-      val t0 = System.nanoTime()
-      graft.kernels.PageRankBlocked.run(edges, verts, bs, iters).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      emit(f"""{"metric":"pagerank_eps","value":${iters * nnz / sec}%.0f,"unit":"edges/sec","sec":$sec%.2f,"mode":"blocked","blockSize":$bs,"iters":$iters,"scale":$scale,"nnz":$nnz,"cpus":$cpus,"parts":$parts}""")
     } else {
       // warmup (JIT + code paths)
       PageRank.profile(edges, verts, 1)

@@ -397,7 +397,7 @@ object SparkEntry {
         lit(-1L))).first().getLong(0)
       val bs = 512
       val nb = BlockMatrix.numBlocks(maxId + 1, bs)
-      val blocks = BlockMatrix.fromEdges(e, bs)
+      val blocks = BlockBuild.csrValBlocks(e, bs, Seq(col("rb"), col("cb")))
       val prod = BlockMatrix.spgemmPhased(blocks, blocks, bs, nb, phases = 2,
         zero = 0.0, add = _ + _, mult = _ * _)
       BlockMatrix.toCoo(prod, bs)

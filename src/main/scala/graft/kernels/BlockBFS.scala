@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** Adjacency-only CSR block (no values — BFS needs structure, not
   * weights): rows are DESTINATION vertices, columns sources, exactly the
-  * [[graft.linalg.BlockMatrix]] layout minus the 8-bytes-per-edge value
+  * [[graft.linalg.MatrixBlock]] layout minus the 8-bytes-per-edge value
   * array. */
 case class AdjBlock(rowBlock: Int, colBlock: Int,
                     rowPtr: Array[Int], colIdx: Array[Int])

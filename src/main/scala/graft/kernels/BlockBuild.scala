@@ -1,14 +1,9 @@
 package graft.kernels
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-
-/** Value-carrying CSR block for numeric array kernels (rows = dst,
-  * cols = src, per-row columns sorted — deterministic FP sum order). */
-case class ValBlock(rowBlock: Int, colBlock: Int,
-                    rowPtr: Array[Int], colIdx: Array[Int],
-                    values: Array[Double])
+import graft.linalg.MatrixBlock
 
 /** Fast CSR-block construction for the in-memory graph kernels.
   *
@@ -87,15 +82,16 @@ object BlockBuild {
     }.rdd
   }
 
-  /** Value-carrying variant for numeric SpMV kernels. Determinism
-    * guarantees the structure-only build does not need:
+  /** Value-carrying variant — the one builder of [[MatrixBlock]], for the
+    * numeric array kernels and the block SpGEMM. Reads (src, dst, w).
+    * Determinism guarantees the structure-only build does not need:
     *  - each row's (colIdx, value) pairs are SORTED by column (a primitive
     *    long sort over (lr|lc|arrival-index) — no boxing), so the per-row
     *    FP sum order is fixed regardless of shuffle arrival order;
     *  - blocks emit in (rowBlock, colBlock) order within each partition,
     *    so cross-block accumulation order is fixed too. */
   def csrValBlocks(edges: DataFrame, blockSize: Int,
-                   keys: Seq[Column]): RDD[ValBlock] = {
+                   keys: Seq[Column]): Dataset[MatrixBlock] = {
     require(blockSize > 0 && (blockSize & (blockSize - 1)) == 0 &&
       blockSize <= 65536, "blockSize must be a power of two <= 2^16")
     val spark = edges.sparkSession
@@ -139,8 +135,8 @@ object BlockBuild {
         }
         i = 0
         while (i < bs) { rowPtr(i + 1) += rowPtr(i); i += 1 }
-        ValBlock((rbcb >>> 16).toInt, (rbcb & 0xFFFF).toInt, rowPtr, colIdx, values)
+        MatrixBlock((rbcb >>> 16).toInt, (rbcb & 0xFFFF).toInt, rowPtr, colIdx, values)
       }
-    }.rdd
+    }
   }
 }

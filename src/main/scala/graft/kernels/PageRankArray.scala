@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.linalg.MatrixBlock
 
 /** PageRank with an in-memory rank vector — the third member of the
   * array-kernel family ([[BlockBFS]], [[BlockCC]]), for the regime where
@@ -21,9 +22,10 @@ import org.apache.spark.storage.StorageLevel
   * pure scheduling at scale-22); large ones merge per rowBlock on
   * executors first (one keyed shuffle of dense segments) so the driver
   * collects only the merged |V| doubles. Either way the driver recovers
-  * the dangling mass as Σx − Σy (each non-dangling column sums to 1 —
-  * [[PageRankBlocked]]'s identity) and applies the teleport formula in a
-  * flat array pass. The relational path's 2 keyed per-edge exchanges
+  * the dangling mass as Σx − Σy: y = Aᵀx with w = 1/outdeg(src), so each
+  * non-dangling source passes on exactly its rank and Σy is Σx minus the
+  * rank held by dangling sources. It then applies the teleport formula in
+  * a flat array pass. The relational path's 2 keyed per-edge exchanges
   * become at most one per-segment exchange plus a ≤128 MB collect.
   *
   * Determinism: per-row columns are sorted at build
@@ -97,7 +99,7 @@ object PageRankArray {
     val edgesNorm = edges.join(outdeg, "src")
       .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("w"))
     val blocks = BlockBuild.csrValBlocks(edgesNorm, blockSize,
-        Seq(col("rb"), pmod(col("cb"), lit(colSplits))))
+        Seq(col("rb"), pmod(col("cb"), lit(colSplits)))).rdd
       .persist(StorageLevel.MEMORY_AND_DISK)
     blocks.count()
     val out = runOn(spark, blocks, vertices, (maxId + 1).toInt, n, iters, d,
@@ -109,7 +111,7 @@ object PageRankArray {
   /** Iterations over pre-built persisted blocks (bench kernel-2 boundary).
     * @param nIds  size of the id space (maxId + 1)
     * @param nVerts |vertices| — the PageRank n in the teleport formula */
-  def runOn(spark: SparkSession, blocks: RDD[ValBlock], vertices: DataFrame,
+  def runOn(spark: SparkSession, blocks: RDD[MatrixBlock], vertices: DataFrame,
             nIds: Int, nVerts: Long, iters: Int, d: Double,
             blockSize: Int,
             collectMaxBytes: Long = DriverCollectMaxBytes): DataFrame = {

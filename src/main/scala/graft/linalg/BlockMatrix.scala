@@ -1,6 +1,6 @@
 package graft.linalg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** One 2D block of the sparse adjacency matrix, CSR over the block's local
@@ -19,132 +19,17 @@ case class MatrixBlock(rowBlock: Int, colBlock: Int,
   def nnz: Int = colIdx.length
 }
 
-/** Dense slice [block*blockSize, (block+1)*blockSize) of a vertex vector —
-  * the analog of FullyDistVec's per-process `arr` (reference
-  * FullyDistVec.h:278). */
-case class VectorSegment(block: Int, values: Array[Double])
-
-/** 2D block-partitioned CSR representation + block SpMV.
+/** 2D block-partitioned CSR operations: block SpGEMM and its phased form.
   *
-  * Built ONCE from the edge relation (the analog of the triples→DCSC build,
-  * reference SpParMat.cpp:2893-2973 SparseCommon: route triples to 2D
-  * owners, sort, compress), then persisted and reused across iterations:
-  * the per-iteration work joins blocks with the (much smaller) vector
-  * segments on colBlock and reduces partials by rowBlock — exactly SUMMA's
-  * row-broadcast + column-reduce (reference ParFriends.h:1938-2010), with
-  * Catalyst planning the two exchanges.
+  * Blocks are built ONCE from the edge relation by
+  * [[graft.kernels.BlockBuild.csrValBlocks]] (the analog of the
+  * triples→DCSC build, reference SpParMat.cpp:2893-2973 SparseCommon:
+  * route triples to 2D owners, sort, compress), then persisted and reused.
   */
 object BlockMatrix {
 
   def numBlocks(nVerts: Long, blockSize: Int): Int =
     ((nVerts + blockSize - 1) / blockSize).toInt
-
-  /** Build blocks from (src, dst[, w]); rows = dst, cols = src. */
-  def fromEdges(edges: DataFrame, blockSize: Int): Dataset[MatrixBlock] = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val w = if (edges.columns.contains("w")) col("w") else lit(1.0)
-    // Integer DIV, not double division — exact for 64-bit vids at web scale.
-    val coo = edges.select(
-      expr(s"CAST(dst DIV $blockSize AS INT)").as("rb"),
-      expr(s"CAST(src DIV $blockSize AS INT)").as("cb"),
-      (col("dst") % blockSize).cast("int").as("lr"),
-      (col("src") % blockSize).cast("int").as("lc"),
-      w.as("w"))
-      .repartition(col("rb"), col("cb"))
-      .sortWithinPartitions("rb", "cb", "lr", "lc")
-      .as[(Int, Int, Int, Int, Double)]
-    coo.mapPartitions { iter =>
-      new Iterator[MatrixBlock] {
-        private val it = iter.buffered
-        def hasNext: Boolean = it.hasNext
-        def next(): MatrixBlock = {
-          val (rb, cb, _, _, _) = it.head
-          val rows = new Array[Int](blockSize + 1)
-          val cols = collection.mutable.ArrayBuffer[Int]()
-          val vals = collection.mutable.ArrayBuffer[Double]()
-          while (it.hasNext && it.head._1 == rb && it.head._2 == cb) {
-            val (_, _, lr, lc, v) = it.next()
-            rows(lr + 1) += 1
-            cols += lc
-            vals += v
-          }
-          var i = 0
-          while (i < blockSize) { rows(i + 1) += rows(i); i += 1 }
-          MatrixBlock(rb, cb, rows, cols.toArray, vals.toArray)
-        }
-      }
-    }
-  }
-
-  /** Dense segments from a (v, xv) vector; absent vids get `default`. */
-  def toSegments(x: DataFrame, blockSize: Int, nBlocks: Int,
-                 default: Double = 0.0): Dataset[VectorSegment] = {
-    val spark = x.sparkSession
-    import spark.implicits._
-    x.select(expr(s"CAST(v DIV $blockSize AS INT)").as("b"),
-        (col("v") % blockSize).cast("int").as("i"), col("xv"))
-      .as[(Int, Int, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (b, it) =>
-        val arr = Array.fill(blockSize)(default)
-        it.foreach { case (_, i, v) => arr(i) = v }
-        VectorSegment(b, arr)
-      }
-  }
-
-  /** y = Aᵀ ⊗ x over a (zero, add, mult) semiring: join blocks⋈segments on
-    * the inner (column) block, local CSR kernel, reduce partials by
-    * rowBlock. Two planned exchanges — the analog of SUMMA's broadcast +
-    * reduce stages. */
-  def spmv(blocks: Dataset[MatrixBlock], segs: Dataset[VectorSegment],
-           blockSize: Int, zero: Double,
-           add: (Double, Double) => Double,
-           mult: (Double, Double) => Double): Dataset[VectorSegment] = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    blocks.joinWith(segs, blocks("colBlock") === segs("block"))
-      .map { case (blk, seg) =>
-        val acc = Array.fill(blockSize)(zero)
-        val x = seg.values
-        var r = 0
-        while (r < blockSize) {
-          var i = blk.rowPtr(r)
-          val end = blk.rowPtr(r + 1)
-          var a = acc(r)
-          while (i < end) {
-            a = add(a, mult(blk.values(i), x(blk.colIdx(i))))
-            i += 1
-          }
-          acc(r) = a
-          r += 1
-        }
-        (blk.rowBlock, acc)
-      }
-      .groupByKey(_._1)
-      .mapGroups { (rb, it) =>
-        val acc = Array.fill(blockSize)(zero)
-        it.foreach { case (_, part) =>
-          var i = 0
-          while (i < blockSize) { acc(i) = add(acc(i), part(i)); i += 1 }
-        }
-        VectorSegment(rb, acc)
-      }
-  }
-
-  /** Segments → (v, yv) rows (drops entries equal to `suppress` if set). */
-  def toVector(segs: Dataset[VectorSegment], blockSize: Int,
-               suppress: Option[Double] = None): DataFrame = {
-    val spark = segs.sparkSession
-    import spark.implicits._
-    val flat = segs.flatMap { s =>
-      s.values.iterator.zipWithIndex.collect {
-        case (v, i) if !suppress.contains(v) =>
-          (s.block.toLong * blockSize + i, v)
-      }
-    }
-    flat.toDF("v", "yv")
-  }
 
   /** Row-wise SPA (sparse accumulator): a dense value array + a
     * generation-stamped mark array + a touched-index list, reset in O(nnz)
@@ -178,7 +63,7 @@ object BlockMatrix {
     * (rowBlock, colBlock) (their multiway merge, MultiwayMerge.h:411-760).
     * SPA scratch is allocated once per task, not per pair.
     *
-    * A is stored rows=dst per [[fromEdges]]; for C = A·B interpret row/col
+    * A is stored rows=dst per [[graft.kernels.BlockBuild.csrValBlocks]]; for C = A·B interpret row/col
     * generically: C(i,j) = Σ_k A(i,k)·B(k,j) with i = A.rowBlock local
     * rows, k = inner, j = B's local columns. */
   def spgemm(a: Dataset[MatrixBlock], b: Dataset[MatrixBlock], blockSize: Int,
@@ -265,8 +150,8 @@ object BlockMatrix {
     }.reduce(_ union _)
   }
 
-  /** Blocks → COO relation (src=col, dst=row per the [[fromEdges]]
-    * transposed layout) for differential checks. */
+  /** Blocks → COO relation (src=col, dst=row per the transposed build
+    * layout) for differential checks. */
   def toCoo(blocks: Dataset[MatrixBlock], blockSize: Int): DataFrame = {
     val spark = blocks.sparkSession
     import spark.implicits._

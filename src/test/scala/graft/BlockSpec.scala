@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.linalg._
-import graft.kernels.{PageRank, PageRankBlocked}
+import graft.kernels.BlockBuild
 
 /** Differential tests: the 2D block-CSR path must equal the plain
   * DataFrame path (SURVEY.md §7 build order step 3). */
@@ -12,41 +12,34 @@ class BlockSpec extends AnyFunSuite {
 
   val pairs = RefKernels.randomGraph(100, 400, seed = 11L)
   lazy val e = undirected(pairs).persist()
-  lazy val v = verticesOf(pairs).persist()
+
+  def build(edges: org.apache.spark.sql.DataFrame) =
+    BlockBuild.csrValBlocks(edges, 32, Seq(col("rb"), col("cb")))
 
   test("block build: nnz conserved, blocks keyed correctly") {
-    val blocks = BlockMatrix.fromEdges(e, 32)
+    val blocks = build(e.withColumn("w", lit(1.0)))
     val stats = BlockMatrix.blockStats(blocks).collect()
     assert(stats.map(_.getLong(2)).sum == e.count())
     assert(stats.forall(r => r.getInt(0) >= 0 && r.getInt(1) >= 0))
   }
 
-  test("block SpMV (+,*) equals DataFrame SpMV") {
+  test("block build: out-of-capacity ids raise instead of truncating") {
     val spark2 = spark
     import spark2.implicits._
-    val x = v.select(col("v"), (col("v") % 5 + 1).cast("double").as("xv"))
-    val plain = SpMV(e, x, PlusTimes).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val blocks = BlockMatrix.fromEdges(e, 32)
-    val nb = BlockMatrix.numBlocks(100, 32)
-    val y = BlockMatrix.toVector(
-      BlockMatrix.spmv(blocks, BlockMatrix.toSegments(x, 32, nb), 32, 0.0, _ + _, _ * _),
-      32, suppress = Some(0.0))
-    val blocked = y.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(blocked == plain)
-  }
-
-  test("block SpMV (min, select2nd) equals DataFrame SpMV") {
-    val x = v.select(col("v"), col("v").cast("double").as("xv"))
-    val plain = SpMV(e, x, Select2ndMin).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val blocks = BlockMatrix.fromEdges(e, 32)
-    val nb = BlockMatrix.numBlocks(100, 32)
-    val inf = Double.PositiveInfinity
-    val y = BlockMatrix.toVector(
-      BlockMatrix.spmv(blocks, BlockMatrix.toSegments(x, 32, nb), 32, inf,
-        math.min, (_, xv) => xv),
-      32, suppress = Some(inf))
-    val blocked = y.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(blocked == plain)
+    def edges(es: (Long, Long)*) =
+      es.toDF("src", "dst").withColumn("w", lit(1.0))
+    def causes(t: Throwable): Iterator[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+    // The last id whose block coordinate fits the 16-bit field still builds.
+    val top = 32L * 32768 - 1
+    val ok = build(edges((0L, top), (top, 0L))).collect()
+    assert(ok.map(_.nnz).sum == 2)
+    assert(ok.map(b => (b.rowBlock, b.colBlock)).toSet == Set((32767, 0), (0, 32767)))
+    for (bad <- Seq(edges((0L, 1L), (-1L, 2L)), edges((0L, 1L), (3L, 32L * 32768)))) {
+      val err = intercept[Exception](build(bad).collect())
+      assert(causes(err).exists(c => String.valueOf(c.getMessage).contains("BlockBuild capacity")),
+        err.toString)
+    }
   }
 
   test("block SpGEMM equals relational SpGEMM (A²)") {
@@ -55,7 +48,7 @@ class BlockSpec extends AnyFunSuite {
     val we = e.withColumn("w", (col("src") % 3 + 1).cast("double"))
     val plain = graft.operators.MatrixOps.spgemm(we, we, PlusTimes).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val blocks = BlockMatrix.fromEdges(we, 32)
+    val blocks = build(we)
     val c = BlockMatrix.spgemm(blocks, blocks, 32, 0.0, _ + _, _ * _)
     val blocked = BlockMatrix.toCoo(c, 32).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
@@ -67,7 +60,7 @@ class BlockSpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     val we = e.withColumn("w", (col("src") % 3 + 1).cast("double"))
-    val blocks = BlockMatrix.fromEdges(we, 32)
+    val blocks = build(we)
     val nb = BlockMatrix.numBlocks(100, 32)
     def coo(c: org.apache.spark.sql.Dataset[MatrixBlock]) =
       BlockMatrix.toCoo(c, 32).collect()
@@ -75,14 +68,5 @@ class BlockSpec extends AnyFunSuite {
     val one = coo(BlockMatrix.spgemm(blocks, blocks, 32, 0.0, _ + _, _ * _))
     val phased = coo(BlockMatrix.spgemmPhased(blocks, blocks, 32, nb, 3, 0.0, _ + _, _ * _))
     assert(one == phased)
-  }
-
-  test("blocked PageRank matches plain PageRank to 1e-12") {
-    val plain = PageRank.runExact(e, v, 10, 0.85).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val blocked = PageRankBlocked.run(e, v, blockSize = 32).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(plain.keySet == blocked.keySet)
-    for ((k, x) <- plain) assert(math.abs(x - blocked(k)) < 1e-12, s"$k: $x vs ${blocked(k)}")
   }
 }

@@ -196,18 +196,19 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("array-vector pagerank matches the relational kernel to 1e-9") {
-    for (seed <- Seq(3L, 19L)) {
-      val pairs = RefKernels.randomGraph(120, 400, seed)
+    // (vertices, seed, blockSize); the last is BlockSpec's graph, 4 blocks per side
+    for ((nv, seed, bs) <- Seq((120, 3L, 64), (120, 19L, 64), (100, 11L, 32))) {
+      val pairs = RefKernels.randomGraph(nv, 400, seed)
       val e = undirected(pairs)
       val v = verticesOf(pairs)
       val rel = PageRank.runExact(e, v, 10, 0.85).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val arr = graft.kernels.PageRankArray.run(e, v, 10, blockSize = 64)
+      val arr = graft.kernels.PageRankArray.run(e, v, 10, blockSize = bs)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(arr.keySet == rel.keySet)
       for ((k, x) <- arr) assert(math.abs(x - rel(k)) < 1e-9, s"v=$k: $x vs ${rel(k)}")
       // determinism at fixed partition count
-      val arr2 = graft.kernels.PageRankArray.run(e.repartition(5), v, 10, blockSize = 64)
+      val arr2 = graft.kernels.PageRankArray.run(e.repartition(5), v, 10, blockSize = bs)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(arr2 == arr, "array pagerank not deterministic under input repartitioning")
     }
