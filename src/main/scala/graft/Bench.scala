@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.graph.LinkGraph
 import graft.kernels._
@@ -27,25 +26,21 @@ import graft.util.Sentinel
   * after the pre-run spin and ended before the post-run spin — the
   * mid-run /proc sampler closes that blind spot.
   *
-  * Run at two parallelism levels (SPARK_GRAFT_CPUS=8 vs 32) on the same
-  * input to evidence scaling efficiency (BASELINE.md).
+  * Usage: `runMain graft.Bench <sfDir>` (the bench input is sf0.1). Run at
+  * two parallelism levels (SPARK_GRAFT_CPUS) on the same input to evidence
+  * scaling efficiency (BASELINE.md).
   */
 object Bench {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    require(args.length == 1, "usage: graft.Bench <sfDir>")
+    val sfDir = args(0)
+    val conf = Conf.fromEnv()
+    val cpus = conf.cpus
     // Shuffle partitions sized to the DATA, not the cores: at sf0.1 the
     // contribution exchange volume grows with partition count (see
     // BENCH.md), so 8 is optimal across local[8..32].
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = conf.session(conf.parts.getOrElse(8))
 
     val edges = LinkGraph.edges(spark, sfDir).persist()
     val verts = LinkGraph.vertices(spark, sfDir).persist()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.checkpoint.SnapshotStore
 import graft.graph.LinkGraph
@@ -17,13 +16,8 @@ object Demo {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val snapDir = if (args.length > 1) args(1) else
       java.nio.file.Files.createTempDirectory("graft-demo").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val conf = Conf.fromEnv()
+    val spark = conf.session(conf.parts.getOrElse(conf.cpus))
 
     val edges = LinkGraph.edges(spark, sfDir).persist()
     val verts = LinkGraph.vertices(spark, sfDir).persist()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.graph.RMat
 import graft.kernels.PageRank
@@ -13,29 +12,24 @@ import graft.kernels.PageRank
   * The input is a seeded RMAT graph big enough to be compute-bound (the
   * sf0.1 co-occurrence graph is scheduler-bound at 32 threads — fixed
   * per-stage latency dominates; see BENCH.md). Usage:
-  *   SPARK_GRAFT_CPUS=8|32 runMain graft.ScalingBench [scale] [edgeFactor]
+  *   SPARK_GRAFT_CPUS=1|4 runMain graft.ScalingBench [scale] [edgeFactor] [mode]
   */
 object ScalingBench {
+  /** Graph500-style BFS roots per run (harmonic-mean TEPS over them). */
+  val BfsRoots = 8
+
   def main(args: Array[String]): Unit = {
     val scale = if (args.length > 0) args(0).toInt else 20
     val ef = if (args.length > 1) args(1).toInt else 8
     val iters = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val conf = Conf.fromEnv()
+    val cpus = conf.cpus
     // Partition count is held CONSTANT across parallelism levels so both
     // runs execute the identical task graph — the variable is core count
     // only, as on a real cluster where N→4N executors process the same
     // shuffle layout. (Tying partitions to cores would change the plan.)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // ad-hoc conf overrides: SPARK_GRAFT_CONF="k1=v1,k2=v2"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val parts = conf.parts.getOrElse(32)
+    val spark = conf.session(parts)
 
     // Contention sentinel (graft.util.Sentinel): pre/post spins + mid-run
     // other-process CPU sampling; every emitted line carries the report and
@@ -75,7 +69,7 @@ object ScalingBench {
       val docs = spark.range(nDocs).as[Long]
         .map(i => (i, graft.pages.PageGen.bodyText(1234L, i)))
         .toDF("doc_id", "text")
-        .repartition(parts.toInt)
+        .repartition(parts)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = docs.count()
       graft.dedup.Dedup.minhash(docs.where(col("doc_id") < 20000)).count() // warmup
@@ -96,7 +90,7 @@ object ScalingBench {
           })
         }
         .toDF("vec_id", "embedding")
-        .repartition(parts.toInt)
+        .repartition(parts)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = emb.count()
       graft.sim.Ann.multiTableTopK(emb.where(col("vec_id") < 20000), 256, 10)
@@ -124,7 +118,7 @@ object ScalingBench {
                        else graft.pages.PageGen.bodyText(1234L, i)
             (i, text, "en")
           }.toDF("doc_id", "text", "lang")
-          .repartition(parts.toInt)
+          .repartition(parts)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         df.count()
         df
@@ -165,7 +159,7 @@ object ScalingBench {
       // OUTSIDE the timed region — the reference times MPI BFS the same
       // way (DirOptBFS.cpp:392-404 brackets only the BFS loop).
       import org.apache.spark.sql.functions._
-      val k = sys.env.getOrElse("SPARK_GRAFT_BFS_ROOTS", "8").toInt
+      val k = BfsRoots
       val blockSize = 65536
       val deg = edges.groupBy(col("src").as("v")).agg(count(lit(1)).as("outdeg"))
       val roots = graft.operators.VectorOps.selectCandidates(deg, k, seed = 7L)
@@ -192,7 +186,7 @@ object ScalingBench {
     } else if (mode == "bfs_rel") {
       // the round-2 relational direction-optimizing path, same timing
       // boundary, for the BENCH.md before/after comparison
-      val k = sys.env.getOrElse("SPARK_GRAFT_BFS_ROOTS", "8").toInt
+      val k = BfsRoots
       val deg = edges.groupBy(col("src").as("v")).agg(count(lit(1)).as("outdeg"))
       val roots = graft.operators.VectorOps.selectCandidates(deg, k, seed = 7L)
         .collect().map(_.getLong(0)).toSeq
@@ -214,7 +208,7 @@ object ScalingBench {
       // round-1 behavior for comparison: pure top-down, unconditional
       // frontier broadcast (alpha=0 disables bottom-up; huge broadcastMax
       // forces the broadcast join at every level)
-      val k = sys.env.getOrElse("SPARK_GRAFT_BFS_ROOTS", "8").toInt
+      val k = BfsRoots
       val deg = edges.groupBy(col("src").as("v")).agg(count(lit(1)).as("outdeg"))
       val roots = graft.operators.VectorOps.selectCandidates(deg, k, seed = 7L)
         .collect().map(_.getLong(0)).toSeq
@@ -242,14 +236,19 @@ object ScalingBench {
       val n = graft.kernels.SSSP.run(we, root).count()
       val sec = (System.nanoTime() - t0) / 1e9
       emit(f"""{"metric":"sssp_sec","value":$sec%.2f,"unit":"sec","reached":$n,"scale":$scale,"nnz":$nnz,"cpus":$cpus,"parts":$parts}""")
-    } else if (mode == "lp") {
+    } else if (mode == "lp" || mode == "lp_shuffle") {
       // label propagation (argmax-count semiring), fixed 5 rounds — one of
-      // the four north-rule flagship kernels
-      graft.kernels.LabelPropagation.run(edges, verts, rounds = 1).count() // warmup
+      // the four north-rule flagship kernels; lp_shuffle forces the
+      // shuffle-join path that label vectors past BroadcastMax take
+      val bmax =
+        if (mode == "lp") graft.kernels.LabelPropagation.BroadcastMax else 0L
+      graft.kernels.LabelPropagation.run(edges, verts, rounds = 1,
+        broadcastMax = bmax).count() // warmup
       val t0 = System.nanoTime()
-      graft.kernels.LabelPropagation.run(edges, verts, rounds = 5).count()
+      graft.kernels.LabelPropagation.run(edges, verts, rounds = 5,
+        broadcastMax = bmax).count()
       val sec = (System.nanoTime() - t0) / 1e9
-      emit(f"""{"metric":"lp_sec","value":$sec%.2f,"unit":"sec","rounds":5,"edges_per_sec_round":${5L * nnz / sec}%.0f,"scale":$scale,"nnz":$nnz,"cpus":$cpus,"parts":$parts}""")
+      emit(f"""{"metric":"lp_sec","value":$sec%.2f,"unit":"sec","mode":"$mode","rounds":5,"edges_per_sec_round":${5L * nnz / sec}%.0f,"scale":$scale,"nnz":$nnz,"cpus":$cpus,"parts":$parts}""")
     } else if (mode == "lp_conv") {
       // One-off probe: how many labels CHANGE per LP round on RMAT? Decides
       // whether a frontier (recompute only neighborhoods that changed) can
@@ -308,7 +307,7 @@ object ScalingBench {
       val sec = (t2 - t0) / 1e9
       emit(f"""{"metric":"cc_sec","value":$sec%.2f,"unit":"sec","mode":"array","build_sec":$buildSec%.2f,"rounds_sec":$roundsSec%.2f,"rounds":${graft.kernels.BlockCC.lastRounds},"scale":$scale,"nnz":$nnz,"cpus":$cpus,"parts":$parts}""")
     } else if (mode == "cc_rel") {
-      val bmax = sys.env.getOrElse("SPARK_GRAFT_CC_BCAST", "1000000").toLong
+      val bmax = graft.kernels.ConnectedComponents.BroadcastMax
       // JIT/shuffle warmup only — two capped iterations, not a full run
       graft.kernels.ConnectedComponents.run(edges, verts, maxIters = 2,
         broadcastMax = bmax, arrayMax = 0L).count()

@@ -393,8 +393,7 @@ object SparkEntry {
       // is independently verified (not just phased ≡ single-phase in-spec)
       import graft.linalg.BlockMatrix
       val e = LinkGraph.edges(s, dir).withColumn("w", lit(1.0))
-      val maxId = e.agg(coalesce(greatest(max(col("src")), max(col("dst"))),
-        lit(-1L))).first().getLong(0)
+      val maxId = IdRange.of(e, "src", "dst").max
       val bs = 512
       val nb = BlockMatrix.numBlocks(maxId + 1, bs)
       val blocks = BlockBuild.csrValBlocks(e, bs, Seq(col("rb"), col("cb")))

@@ -1,19 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Usage:
+  *   runMain graft.Verify <sfDir> <outDir> [q1,q2]
+  * The optional third argument restricts the dump to a comma-separated
+  * subset of queries (local iteration; the gate runs all of them). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length == 2 || args.length == 3,
+      "usage: graft.Verify <sfDir> <outDir> [q1,q2]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
+    val conf = Conf.fromEnv()
+    val spark = conf.session(conf.parts.getOrElse(conf.cpus))
     new java.io.File(outDir).mkdirs()
     // Oracle side-input: the synthesized pages table behind ingest_linkgraph
     // (url + html decoded to string), so DuckDB can independently re-derive
@@ -32,10 +31,6 @@ object Verify {
       .select(org.apache.spark.sql.functions.col("media_id"),
         org.apache.spark.sql.functions.col("payload"))
       .coalesce(1).write.mode("overwrite").parquet(s"${SparkEntry.auxDir}/media")
-    // Local-iteration aid: SPARK_GRAFT_ONLY=q1,q2 restricts the dump to a
-    // comma-separated subset (the driver never sets it — full run there).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     // A failing query does not stop the dump: every other result and
     // oracle_sql.json are still written, then the run exits 1 naming them.
     val failed = SparkEntry.queries

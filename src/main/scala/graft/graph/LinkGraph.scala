@@ -29,7 +29,7 @@ object LinkGraph {
     * self-join for every kernel. Bounded: past `CacheMax` entries the
     * oldest is unpersisted and dropped (a long-lived service iterating
     * over many sf dirs stays at a constant persisted footprint). */
-  val CacheMax: Int = sys.env.getOrElse("SPARK_GRAFT_RELCACHE_MAX", "12").toInt
+  val CacheMax = 12
 
   private val cache =
     new java.util.LinkedHashMap[(SparkSession, String, String), DataFrame](16, 0.75f, false) {

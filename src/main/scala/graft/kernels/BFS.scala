@@ -37,8 +37,7 @@ object BFS {
   /** Fringe sizes below this broadcast into the top-down join; above it the
     * broadcast build (a serial driver collect) is the Amdahl bottleneck and
     * the shuffle-hash join wins. */
-  val BroadcastMax: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BCAST_MAX", "200000").toLong
+  val BroadcastMax: Long = PageRank.BroadcastMax
 
   /** Vertex-id spaces up to this size run the block-bitmap kernel
     * ([[BlockBFS]] — one job per level instead of 3-4 relational jobs);
@@ -46,16 +45,14 @@ object BFS {
     * `bitmapMax = 0`) the fully-distributed relational path runs. 2^27
     * vertices = 16 MB of bitmap — far below driver limits; 10^12 vertices
     * is not, which is why the relational path stays the general case. */
-  val BitmapMax: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BITMAP_MAX", (1L << 27).toString).toLong
+  val BitmapMax: Long = 1L << 27
 
   /** Below this vertex count the relational broadcast path wins: the
     * bitmap kernel's one-time block build (a full edge shuffle) cannot
     * amortize over a toy traversal (measured +1.2 s at sf0.1's 20k
     * vertices), while broadcast-joining a tiny fringe is already near the
     * per-level job floor. */
-  val BitmapMin: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BITMAP_MIN", (1L << 17).toString).toLong
+  val BitmapMin: Long = 1L << 17
 
   /** Levels from `root`, capped at `maxDepth`; unreached vertices omitted.
     * @param edges symmetric (src, dst)
@@ -70,15 +67,12 @@ object BFS {
     val spark = edges.sparkSession
     import spark.implicits._
     if (bitmapMax > 0 && maxDepth <= 127) {
-      // coalesce: an empty edge set (e.g. filtered_bfs with a predicate
-      // that drops every edge) makes greatest(max,max) NULL; min-probe:
-      // negative ids are legal on the relational path but would mis-bucket
-      // in the packed-long block build — both fall through to relational.
-      val ids = edges.agg(
-        coalesce(greatest(max(col("src")), max(col("dst"))), lit(-1L)),
-        coalesce(least(min(col("src")), min(col("dst"))), lit(0L))).first()
-      val maxId = ids.getLong(0); val minId = ids.getLong(1)
-      if (root >= 0 && minId >= 0 && maxId >= BitmapMin && maxId < bitmapMax)
+      // An empty edge set (e.g. filtered_bfs with a predicate that drops
+      // every edge) and negative ids (legal on the relational path, but
+      // they would mis-bucket in the packed-long block build) both fall
+      // through to relational.
+      val ids = IdRange.of(edges, "src", "dst")
+      if (root >= 0 && ids.min >= 0 && ids.max >= BitmapMin && ids.max < bitmapMax)
         return BlockBFS.levels(edges, root, maxDepth)
     }
     val cp = new graft.util.Checkpoints(spark)

@@ -62,8 +62,7 @@ object BlockBFS {
   def levels(edges: DataFrame, root: Long, maxDepth: Int = 10,
              blockSize: Int = 65536, dirThreshold: Double = 4.0): DataFrame = {
     val spark = edges.sparkSession
-    val maxId = math.max(root, edges
-      .agg(greatest(max(col("src")), max(col("dst")))).first().getLong(0))
+    val maxId = math.max(root, IdRange.of(edges, "src", "dst").max)
     val blocks = buildBlocks(edges, blockSize)
       .persist(StorageLevel.MEMORY_AND_DISK)
     blocks.count()

@@ -59,8 +59,7 @@ object ConnectedComponents {
 
   /** Broadcast ceiling for the per-iteration small tables (hooks/labelMap),
     * keyed by live-label count. */
-  val SmallMax: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BCAST_MAX", "200000").toLong
+  val SmallMax: Long = PageRank.BroadcastMax
 
   /** Vertex-id spaces up to this size run the in-memory label-vector
     * kernel ([[BlockCC]] — one treeAggregate job per round plus free
@@ -69,8 +68,7 @@ object ConnectedComponents {
     * = 32 MB per per-partition accumulator — the array path's footprint
     * is O(V) per task, which is why its ceiling sits far below
     * [[BFS.BitmapMax]]'s. */
-  val ArrayMax: Long =
-    sys.env.getOrElse("SPARK_GRAFT_CC_ARRAY_MAX", (1L << 23).toString).toLong
+  val ArrayMax: Long = 1L << 23
 
   /** @param edges symmetric (src, dst); @return (vid: long, component: long) */
   def run(edges: DataFrame, vertices: DataFrame, maxIters: Int = 50,
@@ -80,15 +78,9 @@ object ConnectedComponents {
       // Probe min ids too: negative vertex ids are legal on the relational
       // FastSV path but would mis-bucket in the packed-long block build —
       // fall through to relational rather than corrupt.
-      val vr = vertices.agg(coalesce(max(col("v")), lit(-1L)),
-        coalesce(min(col("v")), lit(0L))).first()
-      val er = edges.agg(
-        coalesce(greatest(max(col("src")), max(col("dst"))), lit(-1L)),
-        coalesce(least(min(col("src")), min(col("dst"))), lit(0L))).first()
-      val maxId = math.max(vr.getLong(0), er.getLong(0))
-      val minId = math.min(vr.getLong(1), er.getLong(1))
-      if (minId >= 0 && maxId >= 0 && maxId + 1 <= arrayMax)
-        return BlockCC.run(edges, vertices, maxId, maxIters = maxIters)
+      val ids = IdRange.of(vertices, "v").union(IdRange.of(edges, "src", "dst"))
+      if (ids.min >= 0 && ids.max >= 0 && ids.max + 1 <= arrayMax)
+        return BlockCC.run(edges, vertices, ids.max, maxIters = maxIters)
     }
     fastsv(edges, vertices, maxIters, broadcastMax, None, None)
   }

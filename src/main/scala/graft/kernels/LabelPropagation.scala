@@ -29,12 +29,12 @@ object LabelPropagation {
     * labels shuffle to the src-partitioned edge table (only the 8-byte
     * label rows move — the per-round broadcast is a serial term that does
     * not shrink with executors, so at-scale runs want the shuffle path). */
-  val BroadcastMax: Long =
-    sys.env.getOrElse("SPARK_GRAFT_LP_BCAST_MAX", "5000000").toLong
+  val BroadcastMax = 5000000L
 
   /** @param edges symmetric (src, dst); @return (vid: long, label: long) */
-  def run(edges: DataFrame, vertices: DataFrame, rounds: Int = 5): DataFrame =
-    lp(edges, vertices, rounds, None, None)
+  def run(edges: DataFrame, vertices: DataFrame, rounds: Int = 5,
+          broadcastMax: Long = BroadcastMax): DataFrame =
+    lp(edges, vertices, rounds, broadcastMax, None, None)
 
   /** Checkpointed run: commits every round's label vector to `store`
     * (atomic manifest + per-partition lineage + nnz/flop metrics) and
@@ -45,13 +45,14 @@ object LabelPropagation {
   def resumable(edges: DataFrame, vertices: DataFrame,
                 store: graft.checkpoint.SnapshotStore, rounds: Int = 5,
                 stopAfter: Option[Int] = None): DataFrame =
-    lp(edges, vertices, rounds, Some(store), stopAfter)
+    lp(edges, vertices, rounds, BroadcastMax, Some(store), stopAfter)
 
   private def lp(edges: DataFrame, vertices: DataFrame, rounds: Int,
+                 broadcastMax: Long,
                  store: Option[graft.checkpoint.SnapshotStore],
                  stopAfter: Option[Int]): DataFrame = {
     val cp = new graft.util.Checkpoints(edges.sparkSession)
-    val bcast = vertices.count() < BroadcastMax
+    val bcast = vertices.count() < broadcastMax
     // Int-pack the persisted edge cache when ids fit 2^31: the per-round
     // join + double aggregate streams this table, and it is DRAM-bound at
     // scale — 8 bytes/edge instead of 16. The label vector is projected to
@@ -59,12 +60,7 @@ object LabelPropagation {
     // reuse of the build-once src partitioning); counts and the struct-max
     // tiebreak are exact integer ops at either width, so results are
     // identical.
-    val mm = edges.agg(
-      coalesce(greatest(max(col("src")), max(col("dst"))), lit(-1L)),
-      coalesce(least(min(col("src")), min(col("dst"))), lit(0L))).first()
-    val idType =
-      if (mm.getLong(1) >= 0 && mm.getLong(0) < Int.MaxValue.toLong) "int"
-      else "bigint"
+    val idType = if (IdRange.of(edges, "src", "dst").fitsInt) "int" else "bigint"
     val ePacked = edges.select(col("src").cast(idType).as("src"),
       col("dst").cast(idType).as("dst"))
     val e = (if (bcast) ePacked else ePacked.repartition(col("src"))).persist()

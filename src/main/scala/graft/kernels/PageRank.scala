@@ -39,8 +39,7 @@ object PageRank {
     * broadcast build (a serial driver-side collect) becomes the Amdahl
     * bottleneck, so the pre-partitioned shuffle join wins — the same
     * dense/sparse switch the reference hand-rolls (CC.h:1256-1294). */
-  val BroadcastMax: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BCAST_MAX", "200000").toLong
+  val BroadcastMax = 200000L
 
   /** @return (vid: long, pr: double rounded to 6 decimals) */
   def run(edges: DataFrame, vertices: DataFrame, iters: Int = 10,
@@ -73,12 +72,7 @@ object PageRank {
     // at scan time is the SAME double the old cache stored, so results are
     // bit-identical; the division is pipelined compute on a scan that is
     // DRAM-bandwidth-bound, so halving the bytes is a straight win.
-    val mm = edges.agg(
-      coalesce(greatest(max(col("src")), max(col("dst"))), lit(-1L)),
-      coalesce(least(min(col("src")), min(col("dst"))), lit(0L))).first()
-    val idType =
-      if (mm.getLong(1) >= 0 && mm.getLong(0) < Int.MaxValue.toLong) "int"
-      else "bigint"
+    val idType = if (IdRange.of(edges, "src", "dst").fitsInt) "int" else "bigint"
     // Pre-partitioned by src ONCE: in the shuffle-join path only the rank
     // vector moves per iteration (the 2D-distribution-built-once analog).
     val edgesNorm = edges.join(outdeg, "src")

@@ -37,8 +37,7 @@ object Triangles {
     * Σ outdeg² wedge ROWS through the mask join; the intersection does the
     * same arithmetic in primitive arrays). Past the ceiling the relational
     * SUMMA-shaped plan runs — distributed, nothing driver-resident. */
-  val ArrayMaxEdges: Long =
-    sys.env.getOrElse("SPARK_GRAFT_TRI_ARRAY_MAX", "4000000").toLong
+  val ArrayMaxEdges = 4000000L
 
   /** @param edges symmetric (src, dst); @return single row (triangles: long) */
   def count(edges: DataFrame): DataFrame = {

@@ -1,0 +1,34 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** graft.Conf is the only place the environment is read: bad values fail
+  * at startup naming their variable, and no other main source reads it. */
+class ConfSpec extends AnyFunSuite {
+
+  test("an empty environment gives the defaults") {
+    assert(Conf.parse(Map.empty) ==
+      Conf(Runtime.getRuntime.availableProcessors, None))
+    assert(Conf.parse(Map(Conf.CpusVar -> "3", Conf.PartsVar -> "16")) ==
+      Conf(3, Some(16)))
+  }
+
+  test("a non-integer or non-positive value raises an error naming its variable") {
+    for (name <- Seq(Conf.CpusVar, Conf.PartsVar); bad <- Seq("abc", "0", "-2")) {
+      val e = intercept[IllegalArgumentException](Conf.parse(Map(name -> bad)))
+      assert(e.getMessage.contains(name), s"$name=$bad: ${e.getMessage}")
+    }
+  }
+
+  test("only graft/Conf.scala reads the environment under src/main/scala") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"${root.getAbsolutePath} not found")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val readers = files(root).filter { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      src.contains("sys.env") || src.contains("System.getenv")
+    }.map(f => root.toPath.relativize(f.toPath).toString.replace('\\', '/'))
+    assert(readers == Seq("graft/Conf.scala"))
+  }
+}

@@ -33,8 +33,12 @@ class KernelSpec extends AnyFunSuite {
     val cc = ConnectedComponents.run(e, v).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc == RefKernels.components(edgeSeq, vertSeq), s"$name cc")
 
+    val lpRef = RefKernels.labelProp(edgeSeq, vertSeq)
     val lp = LabelPropagation.run(e, v).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lp == RefKernels.labelProp(edgeSeq, vertSeq), s"$name lp")
+    assert(lp == lpRef, s"$name lp")
+    val lpShuffle = LabelPropagation.run(e, v, broadcastMax = 0L).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lpShuffle == lpRef, s"$name lp shuffle-join path")
 
     val tc = Triangles.count(e).collect()(0).getLong(0)
     assert(tc == RefKernels.triangles(edgeSeq), s"$name tricnt")
@@ -129,6 +133,10 @@ class KernelSpec extends AnyFunSuite {
       dirThreshold = 0.0)) == want, "bitmap kernel, forced bottom-up")
     assert(asMap(graft.kernels.BlockBFS.levels(e, root, blockSize = 64,
       dirThreshold = Double.MaxValue)) == want, "bitmap kernel, forced top-down")
+    val none = e.limit(0)
+    assert(asMap(BFS.levels(none, root)) == Map(root -> 0L), "empty edge set")
+    assert(asMap(graft.kernels.BlockBFS.levels(none, root)) == Map(root -> 0L),
+      "bitmap kernel, empty edge set")
   }
 
   test("SSSP differential vs driver Dijkstra; frontier paths agree") {
@@ -212,27 +220,6 @@ class KernelSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(arr2 == arr, "array pagerank not deterministic under input repartitioning")
     }
-  }
-
-  test("array pagerank: driver-collect and executor-merge modes are bit-identical") {
-    // An id space above DriverMergeMax (1<<20) so the merge-mode switch is
-    // exercised: collectMaxBytes=Long.MaxValue forces the one-stage
-    // driver-collect path, 0 forces the two-stage executor merge. Both add
-    // partial segments pid-sorted, so the results must match BIT-exactly.
-    val spark = TestSpark.spark
-    val n = (1 << 20) + 4096
-    val ids = spark.range(0, 4000).toDF("i")
-    val e0 = ids.select(
-      (col("i") * 262139L % n).as("src"), (col("i") * 131071L % n).as("dst"))
-    val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-    val v = spark.range(n.toLong).toDF("v")
-    def runMode(cap: Long) =
-      graft.kernels.PageRankArray.run(e, v, iters = 5, collectMaxBytes = cap)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val driverCollect = runMode(Long.MaxValue)
-    val executorMerge = runMode(0L)
-    assert(driverCollect == executorMerge,
-      "merge modes diverge — pid-sort order no longer shared")
   }
 
   test("pagerank shuffle-join path (broadcastMax=0) equals broadcast path") {
