@@ -2,16 +2,17 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.graph.RMat
-import graft.kernels.PageRank
+import graft.kernels.{BlockStep, PageRank}
 
 /** Two-cluster-size scaling evidence (BASELINE.json north_rule: ≥0.8
-  * efficiency from N to 4N). No real cluster exists in this sandbox, so the
-  * SAME job runs on the SAME deterministic input at two parallelism levels
-  * (local[8] vs local[32]) and reports throughput at both.
+  * efficiency from N to 4N). No real cluster exists on a single box, so
+  * the SAME job runs on the SAME deterministic input at two parallelism
+  * levels — local[1] and local[4] on a 4-core box, set by SPARK_GRAFT_CPUS
+  * with the partition count held fixed — and reports throughput at both.
   *
   * The input is a seeded RMAT graph big enough to be compute-bound (the
-  * sf0.1 co-occurrence graph is scheduler-bound at 32 threads — fixed
-  * per-stage latency dominates; see BENCH.md). Usage:
+  * sf0.1 co-occurrence graph is scheduler-bound — fixed per-stage latency
+  * dominates; see BENCH.md). Usage:
   *   SPARK_GRAFT_CPUS=1|4 runMain graft.ScalingBench [scale] [edgeFactor] [mode]
   */
 object ScalingBench {
@@ -164,22 +165,22 @@ object ScalingBench {
       val deg = edges.groupBy(col("src").as("v")).agg(count(lit(1)).as("outdeg"))
       val roots = graft.operators.VectorOps.selectCandidates(deg, k, seed = 7L)
         .collect().map(_.getLong(0)).toSeq
-      val blocks = graft.kernels.BlockBFS.buildBlocks(edges, blockSize)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      blocks.count()
       val nV = 1L << scale
-      graft.kernels.BlockBFS.levelsOn(spark, blocks, nV, roots.head, 30, blockSize)
-        .count() // warmup
-      val teps = roots.map { r =>
-        val t0 = System.nanoTime()
-        val visited = graft.kernels.BlockBFS
-          .levelsOn(spark, blocks, nV, r, 30, blockSize)
-        visited.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val traversed = edges.join(
-          visited.select(col("vid").as("src")), Seq("src"), "left_semi").count()
-        visited.unpersist(false)
-        traversed / sec
+      val bfsBlocks = graft.kernels.BlockBFS.buildBlocks(edges, blockSize)
+      val teps = BlockStep.persisted(bfsBlocks) { blocks =>
+        graft.kernels.BlockBFS.levelsOn(spark, blocks, nV, roots.head, 30, blockSize)
+          .count() // warmup
+        roots.map { r =>
+          val t0 = System.nanoTime()
+          val visited = graft.kernels.BlockBFS
+            .levelsOn(spark, blocks, nV, r, 30, blockSize)
+          visited.count()
+          val sec = (System.nanoTime() - t0) / 1e9
+          val traversed = edges.join(
+            visited.select(col("vid").as("src")), Seq("src"), "left_semi").count()
+          visited.unpersist(false)
+          traversed / sec
+        }
       }
       val harmonic = teps.length / teps.map(1.0 / _).sum
       emit(f"""{"metric":"bfs_harmonic_teps","value":$harmonic%.0f,"unit":"edges/sec","mode":"bitmap","roots":$k,"scale":$scale,"nnz":$nnz,"cpus":$cpus,"parts":$parts}""")
@@ -296,13 +297,12 @@ object ScalingBench {
       val nV = (1L << scale).toInt
       graft.kernels.BlockCC.run(edges, verts, (1L << scale) - 1).count() // warmup
       val t0 = System.nanoTime()
-      val blocks = graft.kernels.BlockCC.buildRowBlocks(edges, bs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      blocks.count()
-      val t1 = System.nanoTime()
-      graft.kernels.BlockCC.runOn(spark, blocks, verts, nV, bs, 50).count()
-      val t2 = System.nanoTime()
-      blocks.unpersist(false)
+      val ccBlocks = graft.kernels.BlockCC.buildRowBlocks(edges, bs)
+      val (t1, t2) = BlockStep.persisted(ccBlocks) { blocks =>
+        val t1 = System.nanoTime()
+        graft.kernels.BlockCC.runOn(spark, blocks, verts, nV, bs, 50).count()
+        (t1, System.nanoTime())
+      }
       val buildSec = (t1 - t0) / 1e9; val roundsSec = (t2 - t1) / 1e9
       val sec = (t2 - t0) / 1e9
       emit(f"""{"metric":"cc_sec","value":$sec%.2f,"unit":"sec","mode":"array","build_sec":$buildSec%.2f,"rounds_sec":$roundsSec%.2f,"rounds":${graft.kernels.BlockCC.lastRounds},"scale":$scale,"nnz":$nnz,"cpus":$cpus,"parts":$parts}""")
@@ -321,30 +321,31 @@ object ScalingBench {
       // (kernel-2) split, same boundary as the bfs/cc array modes
       val bs = 65536
       val nIds = (1L << scale).toInt
-      import org.apache.spark.sql.functions._
-      val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      val edgesNorm = edges.join(outdeg, "src")
-        .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("w"))
       graft.kernels.PageRankArray.run(edges, verts, iters = 1).count() // warmup
       val t0 = System.nanoTime()
-      val blocks = graft.kernels.BlockBuild.csrValBlocks(edgesNorm, bs,
-          Seq(col("rb"), pmod(col("cb"), lit(2)))).rdd
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      blocks.count()
-      val t1 = System.nanoTime()
-      graft.kernels.PageRankArray.runOn(spark, blocks, verts, nIds,
-        1L << scale, iters, 0.85, bs).count()
-      val t2 = System.nanoTime()
-      blocks.unpersist(false)
+      val prBlocks = graft.kernels.PageRankArray.buildBlocks(edges, bs)
+      val (t1, t2) = BlockStep.persisted(prBlocks) { blocks =>
+        val t1 = System.nanoTime()
+        graft.kernels.PageRankArray.runOn(spark, blocks, verts, nIds,
+          1L << scale, iters, 0.85, bs).count()
+        (t1, System.nanoTime())
+      }
       val buildSec = (t1 - t0) / 1e9
       val iterSec = (t2 - t1) / 1e9 / iters
       val (phB, phJ, phD) = graft.kernels.PageRankArray.lastPhases
       emit(f"""{"metric":"pagerank_eps","value":${nnz / iterSec}%.0f,"unit":"edges/sec","mode":"array","build_sec":$buildSec%.2f,"iter_sec":$iterSec%.3f,"iters":$iters,"bcast_sec":$phB%.2f,"job_sec":$phJ%.2f,"driver_sec":$phD%.2f,"scale":$scale,"nnz":$nnz,"cpus":$cpus,"parts":$parts}""")
     } else {
-      // warmup (JIT + code paths)
-      PageRank.profile(edges, verts, 1)
-      val (prepSec, iterSec) = PageRank.profile(edges, verts, iters)
-      val sec = prepSec + iterSec * iters
+      // warmup (JIT + code paths), then prepare alone (0 iterations) and
+      // prepare + iters; the difference is the iterations' share
+      def timed(k: Int): Double = {
+        val t0 = System.nanoTime()
+        PageRank.runExact(edges, verts, k, 0.85)
+        (System.nanoTime() - t0) / 1e9
+      }
+      timed(1)
+      val prepSec = timed(0)
+      val sec = timed(iters)
+      val iterSec = (sec - prepSec) / iters
       val eps = nnz / iterSec
       emit(f"""{"metric":"pagerank_eps","value":$eps%.0f,"unit":"edges/sec","sec":$sec%.2f,"prep_sec":$prepSec%.2f,"iter_sec":$iterSec%.3f,"iters":$iters,"scale":$scale,"edgefactor":$ef,"nnz":$nnz,"cpus":$cpus,"parts":$parts}""")
     }

@@ -3,14 +3,14 @@ package graft.kernels
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.linalg.CsrBlock
 
 /** Adjacency-only CSR block (no values — BFS needs structure, not
   * weights): rows are DESTINATION vertices, columns sources, exactly the
   * [[graft.linalg.MatrixBlock]] layout minus the 8-bytes-per-edge value
   * array. */
 case class AdjBlock(rowBlock: Int, colBlock: Int,
-                    rowPtr: Array[Int], colIdx: Array[Int])
+                    rowPtr: Array[Int], colIdx: Array[Int]) extends CsrBlock
 
 /** Block-level bitmap BFS — the reference's Graph500 kernel shape
   * (BFSFriends.h:458-565 bottom-up over BitMapFringe.h bitmaps;
@@ -63,13 +63,10 @@ object BlockBFS {
              blockSize: Int = 65536, dirThreshold: Double = 4.0): DataFrame = {
     val spark = edges.sparkSession
     val maxId = math.max(root, IdRange.of(edges, "src", "dst").max)
-    val blocks = buildBlocks(edges, blockSize)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    blocks.count()
-    val out = levelsOn(spark, blocks, maxId + 1, root, maxDepth, blockSize,
-      dirThreshold)
-    blocks.unpersist(blocking = false)
-    out
+    BlockStep.persisted(buildBlocks(edges, blockSize)) { blocks =>
+      levelsOn(spark, blocks, maxId + 1, root, maxDepth, blockSize,
+        dirThreshold)
+    }
   }
 
   /** Sparse-or-dense encoding of one partition's candidate words:
@@ -246,15 +243,10 @@ object BlockBFS {
       }
     }
 
-    val bcD = sc.broadcast(dist)
-    val out = spark.range(n).as[Long].mapPartitions { it =>
-      val d = bcD.value
-      it.flatMap { v =>
+    BlockStep.toFrame(spark.range(n).as[Long], dist, "vid", "dist")((d, ids) =>
+      ids.flatMap { v =>
         val dv = d(v.toInt)
         if (dv >= 0) Iterator((v, dv.toLong)) else Iterator.empty
-      }
-    }.toDF("vid", "dist").localCheckpoint()
-    bcD.destroy()
-    out
+      })
   }
 }

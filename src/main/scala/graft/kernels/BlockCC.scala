@@ -3,7 +3,6 @@ package graft.kernels
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Block-level connected components with an in-memory label vector — the
   * same regime split as [[BlockBFS]]: while the |V|-sized label array fits
@@ -64,12 +63,9 @@ object BlockCC {
     require(maxId + 1 <= Int.MaxValue.toLong, "array path requires V < 2^31")
     val n = (maxId + 1).toInt
 
-    val blocks = buildRowBlocks(edges, blockSize)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    blocks.count()
-    val out = runOn(spark, blocks, vertices, n, blockSize, maxIters)
-    blocks.unpersist(blocking = false)
-    out
+    BlockStep.persisted(buildRowBlocks(edges, blockSize)) { blocks =>
+      runOn(spark, blocks, vertices, n, blockSize, maxIters)
+    }
   }
 
   /** Label rounds over pre-built row-partitioned persisted blocks. */
@@ -77,50 +73,39 @@ object BlockCC {
             n: Int, blockSize: Int, maxIters: Int): DataFrame = {
     val sc = spark.sparkContext
     import spark.implicits._
-    var f = Array.tabulate(n)(i => i) // f(v) = current component label
+    val f = Array.tabulate(n)(i => i) // f(v) = current component label
 
     val bs = blockSize
-    val nn = n
+    val noLabel = () => { val a = new Array[Int](bs); java.util.Arrays.fill(a, Int.MaxValue); a }
     var changed = true
     var it = 0
     while (changed && it < maxIters) {
       it += 1
-      val bcF = sc.broadcast(f)
       // mngp segments: min over neighbors u of f(u), per (row block ×
       // partition) — the Select2ndMin SpMV as ONE job; ≤ colSplits
       // partial segments per rb come back (each hooks independently), so
       // the wire volume is O(colSplits · V) Ints per round.
-      val segs = blocks.mapPartitions { iter =>
-        val lab = bcF.value
-        val perRb = collection.mutable.LinkedHashMap[Int, Array[Int]]()
-        iter.foreach { blk =>
-          val seg = perRb.getOrElseUpdate(blk.rowBlock, {
-            val a = new Array[Int](bs); java.util.Arrays.fill(a, Int.MaxValue); a
-          })
-          val cbase = blk.colBlock * bs
-          val rbase = blk.rowBlock * bs
-          val rMax = math.min(bs, nn - rbase)
-          var r = 0
-          while (r < rMax) {
-            var p = blk.rowPtr(r)
-            val end = blk.rowPtr(r + 1)
-            var m = seg(r)
-            while (p < end) {
-              val l = lab(cbase + blk.colIdx(p))
-              if (l < m) m = l
-              p += 1
-            }
-            seg(r) = m
-            r += 1
+      val segs = BlockStep.rowSegments(blocks, sc.broadcast(f), bs, n,
+          noLabel) { (lab, blk, seg, rMax) =>
+        val cbase = blk.colBlock * bs
+        var r = 0
+        while (r < rMax) {
+          var p = blk.rowPtr(r)
+          val end = blk.rowPtr(r + 1)
+          var m = seg(r)
+          while (p < end) {
+            val l = lab(cbase + blk.colIdx(p))
+            if (l < m) m = l
+            p += 1
           }
+          seg(r) = m
+          r += 1
         }
-        perRb.iterator
-      }.collect()
-      bcF.destroy()
+      }
       // hook + FULL pointer compression on the driver array (FastSV's
       // hook/shortcut collapsed to union-find-style passes — O(V·α)).
       changed = false
-      for ((rb, seg) <- segs) {
+      for ((rb, _, seg) <- segs) {
         val rbase = rb * bs
         val rMax = math.min(bs, n - rbase)
         var r = 0
@@ -155,13 +140,7 @@ object BlockCC {
     }
 
     lastRounds = it
-    val bcD = sc.broadcast(f)
-    val out = vertices.select(col("v").cast("long")).as[Long]
-      .mapPartitions { it =>
-        val lab = bcD.value
-        it.map(v => (v, lab(v.toInt).toLong))
-      }.toDF("vid", "component").localCheckpoint()
-    bcD.destroy()
-    out
+    BlockStep.toFrame(vertices.select(col("v").cast("long")).as[Long], f,
+      "vid", "component")((lab, ids) => ids.map(v => (v, lab(v.toInt).toLong)))
   }
 }

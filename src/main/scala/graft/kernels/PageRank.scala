@@ -140,54 +140,10 @@ object PageRank {
   private def nextSink(ctx: Ctx, sink: Double, d: Double): Double =
     ctx.isolatedSinks.map(k => k * ((1 - d) / ctx.n + d * sink / ctx.n)).getOrElse(0.0)
 
-  private def initSink(ctx: Ctx): Option[Double] =
-    ctx.isolatedSinks.map(k => k * (1.0 / ctx.n))
-
-  private def release(ctx: Ctx): Unit = {
-    ctx.edgesNorm.unpersist(false); ctx.dangling.unpersist(false)
-    ctx.noInbound.unpersist(false); ctx.verts.unpersist(false)
-  }
-
-  /** Phase-timed run for benchmarking: (prepareSec, perIterSec). */
-  def profile(edges: DataFrame, vertices: DataFrame, iters: Int,
-              d: Double = 0.85,
-              broadcastMax: Long = BroadcastMax): (Double, Double) = {
-    val t0 = System.nanoTime()
-    val cp = new graft.util.Checkpoints(edges.sparkSession)
-    val ctx = prepare(edges, vertices, broadcastMax)
-    var pr = cp(ctx.verts.select(col("v"), lit(1.0 / ctx.n).as("r")))
-    var sink = initSink(ctx)
-    val t1 = System.nanoTime()
-    for (_ <- 1 to iters) {
-      val prev = pr
-      pr = cp(step(ctx, pr, d, sink))
-      sink = sink.map(s => nextSink(ctx, s, d))
-      cp.free(prev)
-    }
-    pr.count()
-    val t2 = System.nanoTime()
-    release(ctx)
-    cp.freeAllExcept(pr)
-    ((t1 - t0) / 1e9, (t2 - t1) / 1e9 / iters)
-  }
-
   /** Unrounded ranks (v: long, r: double). */
   def runExact(edges: DataFrame, vertices: DataFrame, iters: Int,
-               d: Double, broadcastMax: Long = BroadcastMax): DataFrame = {
-    val cp = new graft.util.Checkpoints(edges.sparkSession)
-    val ctx = prepare(edges, vertices, broadcastMax)
-    var pr = cp(ctx.verts.select(col("v"), lit(1.0 / ctx.n).as("r")))
-    var sink = initSink(ctx)
-    for (_ <- 1 to iters) {
-      val prev = pr
-      pr = cp(step(ctx, pr, d, sink))
-      sink = sink.map(s => nextSink(ctx, s, d))
-      cp.free(prev)
-    }
-    release(ctx)
-    cp.freeAllExcept(pr)
-    pr
-  }
+               d: Double, broadcastMax: Long = BroadcastMax): DataFrame =
+    iterate(edges, vertices, iters, d, broadcastMax, None, None)
 
   /** Checkpointed run: commits every iteration's vector to `store` and
     * resumes from the latest snapshot. Pass `stopAfter` to abandon the run
@@ -195,36 +151,42 @@ object PageRank {
     * @return (v, r) at the last completed iteration ≤ iters */
   def resumable(edges: DataFrame, vertices: DataFrame, store: SnapshotStore,
                 iters: Int = 10, d: Double = 0.85,
-                stopAfter: Option[Int] = None): DataFrame = {
+                stopAfter: Option[Int] = None): DataFrame =
+    iterate(edges, vertices, iters, d, BroadcastMax, Some(store), stopAfter)
+
+  private def iterate(edges: DataFrame, vertices: DataFrame, iters: Int,
+                      d: Double, broadcastMax: Long,
+                      store: Option[SnapshotStore],
+                      stopAfter: Option[Int]): DataFrame = {
     val spark = edges.sparkSession
     val cp = new graft.util.Checkpoints(spark)
-    val ctx = prepare(edges, vertices)
-    val resumed = store.latest()
-    var iter = resumed.map(_.iteration).getOrElse(0)
+    val ctx = prepare(edges, vertices, broadcastMax)
+    val resumed = store.flatMap(_.latest())
     var pr = resumed match {
-      case Some(s) => cp(store.load(spark, s))
+      case Some(s) => cp(store.get.load(spark, s))
       case None =>
         val init = cp(ctx.verts.select(col("v"), lit(1.0 / ctx.n).as("r")))
-        store.commit(init, 0, ctx.nnz, 0L)
+        store.foreach(_.commit(init, 0, ctx.nnz, 0L))
         init
     }
+    val from = resumed.map(_.iteration).getOrElse(0)
     // On resume the sink mass is recovered with a one-time aggregate.
-    var sink: Option[Double] = ctx.isolatedSinks.map { _ =>
-      if (iter == 0) ctx.isolatedSinks.get * (1.0 / ctx.n)
+    var sink: Option[Double] = ctx.isolatedSinks.map { k =>
+      if (from == 0) k * (1.0 / ctx.n)
       else pr.join(ctx.dangling, Seq("v"), "left_semi")
         .agg(coalesce(sum(col("r")), lit(0.0))).first().getDouble(0)
     }
     val limit = stopAfter.map(s => math.min(s, iters)).getOrElse(iters)
-    while (iter < limit) {
-      iter += 1
+    for (iter <- from + 1 to limit) {
       val prev = pr
       pr = cp(step(ctx, pr, d, sink))
       sink = sink.map(s => nextSink(ctx, s, d))
       // 2 flops per stored edge per SpMV iteration (multiply + add).
-      store.commit(pr, iter, ctx.nnz, 2L * ctx.nnz)
+      store.foreach(_.commit(pr, iter, ctx.nnz, 2L * ctx.nnz))
       cp.free(prev)
     }
-    release(ctx)
+    ctx.edgesNorm.unpersist(false); ctx.dangling.unpersist(false)
+    ctx.noInbound.unpersist(false); ctx.verts.unpersist(false)
     cp.freeAllExcept(pr)
     pr
   }

@@ -3,7 +3,6 @@ package graft.kernels
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.linalg.MatrixBlock
 
 /** PageRank with an in-memory rank vector — the third member of the
@@ -50,11 +49,24 @@ object PageRankArray {
     * guess. Not thread-safe — bench-only. */
   @volatile var lastPhases: (Double, Double, Double) = (0.0, 0.0, 0.0)
 
-  /** @param edges (src, dst); @param vertices (v) — dense ids ≤ maxId
+  /** Value-carrying CSR blocks of the column-stochastic matrix (w =
+    * 1/outdeg(src)), hash-partitioned by (rowBlock, colBlock mod
+    * `colSplits`) — the build half of [[run]].
     * @param colSplits column sub-splits per rowBlock: build-time balance
     *        vs per-iteration partial-segment volume (≤ colSplits × |V|
     *        doubles — 2 measured best at scale-22: 64 MB/iter vs 8-split's
-    *        256 MB for identical build time)
+    *        256 MB for identical build time) */
+  def buildBlocks(edges: DataFrame, blockSize: Int,
+                  colSplits: Int = 2): RDD[MatrixBlock] = {
+    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    val edgesNorm = edges.join(outdeg, "src")
+      .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("w"))
+    BlockBuild.csrValBlocks(edgesNorm, blockSize,
+      Seq(col("rb"), pmod(col("cb"), lit(colSplits)))).rdd
+  }
+
+  /** @param edges (src, dst); @param vertices (v) — dense ids ≤ maxId
+    * @param colSplits see [[buildBlocks]]
     * @return (vid, pr) UNROUNDED, one row per vertex (differential specs
     *         compare against [[PageRank.runExact]] at 1e-9) */
   def run(edges: DataFrame, vertices: DataFrame, iters: Int = 10,
@@ -67,18 +79,9 @@ object PageRankArray {
     require(maxId >= 0 && maxId + 1 <= Int.MaxValue.toLong,
       "array path requires V < 2^31")
     val n = vertices.count()
-
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val edgesNorm = edges.join(outdeg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("w"))
-    val blocks = BlockBuild.csrValBlocks(edgesNorm, blockSize,
-        Seq(col("rb"), pmod(col("cb"), lit(colSplits)))).rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    blocks.count()
-    val out = runOn(spark, blocks, vertices, (maxId + 1).toInt, n, iters, d,
-      blockSize)
-    blocks.unpersist(blocking = false)
-    out
+    BlockStep.persisted(buildBlocks(edges, blockSize, colSplits)) { blocks =>
+      runOn(spark, blocks, vertices, (maxId + 1).toInt, n, iters, d, blockSize)
+    }
   }
 
   /** Iterations over pre-built persisted blocks (bench kernel-2 boundary).
@@ -90,12 +93,11 @@ object PageRankArray {
     val sc = spark.sparkContext
     import spark.implicits._
     val bs = blockSize
-    val nn = nIds
+    val verts = vertices.select(col("v").cast("long")).as[Long]
     var pr = new Array[Double](nIds)
     // init 1/n on actual vertices only (id space may be sparse)
     val isVertex = new Array[Boolean](nIds)
-    vertices.select(col("v").cast("long")).as[Long].collect()
-      .foreach(v => isVertex(v.toInt) = true)
+    verts.collect().foreach(v => isVertex(v.toInt) = true)
     val init = 1.0 / nVerts
     var v0 = 0
     while (v0 < nIds) { if (isVertex(v0)) pr(v0) = init; v0 += 1 }
@@ -106,46 +108,30 @@ object PageRankArray {
       val bcX = sc.broadcast(pr)
       tBcast += (System.nanoTime() - tb0) / 1e9
       val tj0 = System.nanoTime()
-      // Per-partition partial contribution segments, keyed by rowBlock and
-      // added on the driver in (rb, pid) order — a fixed FP order for a
-      // fixed partition count.
-      val partials = blocks.mapPartitionsWithIndex { (pid, iter) =>
-        val x = bcX.value
-        val perRb = collection.mutable.LinkedHashMap[Int, Array[Double]]()
-        iter.foreach { blk =>
-          val seg = perRb.getOrElseUpdate(blk.rowBlock, new Array[Double](bs))
-          val cbase = blk.colBlock * bs
-          val rbase = blk.rowBlock * bs
-          val rMax = math.min(bs, nn - rbase)
-          var r = 0
-          while (r < rMax) {
-            var p = blk.rowPtr(r)
-            val end = blk.rowPtr(r + 1)
-            var s = seg(r)
-            while (p < end) {
-              s += blk.values(p) * x(cbase + blk.colIdx(p))
-              p += 1
-            }
-            seg(r) = s
-            r += 1
+      val segs = BlockStep.rowSegments(blocks, bcX, bs, nIds,
+          () => new Array[Double](bs)) { (x, blk, seg, rMax) =>
+        val cbase = blk.colBlock * bs
+        var r = 0
+        while (r < rMax) {
+          var p = blk.rowPtr(r)
+          val end = blk.rowPtr(r + 1)
+          var s = seg(r)
+          while (p < end) {
+            s += blk.values(p) * x(cbase + blk.colIdx(p))
+            p += 1
           }
+          seg(r) = s
+          r += 1
         }
-        perRb.iterator.map { case (rb, seg) => (rb, (pid, seg)) }
       }
-      val segs = partials.collect().groupBy(_._1).toArray.map { case (rb, parts) =>
-        val acc = new Array[Double](bs)
-        parts.sortBy(_._2._1).foreach { case (_, (_, seg)) =>
-          var r = 0
-          while (r < bs) { acc(r) += seg(r); r += 1 }
-        }
-        (rb, acc)
-      }
-      bcX.destroy() // public destroy() is non-blocking in Spark 4
       tJob += (System.nanoTime() - tj0) / 1e9
       val td0 = System.nanoTime()
 
+      // Partial segments arrive partition by partition, so each row adds
+      // its partials in partitionId order — a fixed FP order for a fixed
+      // partition count.
       val y = new Array[Double](nIds)
-      segs.foreach { case (rb, seg) =>
+      segs.foreach { case (rb, _, seg) =>
         val rbase = rb * bs
         val rMax = math.min(bs, nIds - rbase)
         var r = 0
@@ -167,13 +153,7 @@ object PageRankArray {
     }
     lastPhases = (tBcast, tJob, tDriver)
 
-    val bcPr = sc.broadcast(pr)
-    val out = vertices.select(col("v").cast("long")).as[Long]
-      .mapPartitions { it =>
-        val p = bcPr.value
-        it.map(v => (v, p(v.toInt)))
-      }.toDF("vid", "pr").localCheckpoint()
-    bcPr.destroy()
-    out
+    BlockStep.toFrame(verts, pr, "vid", "pr")((p, ids) =>
+      ids.map(v => (v, p(v.toInt))))
   }
 }

@@ -3,6 +3,15 @@ package graft.linalg
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+/** The CSR structure every block format shares — what
+  * [[graft.kernels.BlockStep.rowSegments]] reads. */
+trait CsrBlock {
+  def rowBlock: Int
+  def colBlock: Int
+  def rowPtr: Array[Int]
+  def colIdx: Array[Int]
+}
+
 /** One 2D block of the sparse adjacency matrix, CSR over the block's local
   * rows. Rows are DESTINATION vertices (we store Aᵀ so SpMV accumulates
   * into contiguous local rows), columns are sources.
@@ -15,7 +24,7 @@ import org.apache.spark.sql.functions._
   */
 case class MatrixBlock(rowBlock: Int, colBlock: Int,
                        rowPtr: Array[Int], colIdx: Array[Int],
-                       values: Array[Double]) {
+                       values: Array[Double]) extends CsrBlock {
   def nnz: Int = colIdx.length
 }
 

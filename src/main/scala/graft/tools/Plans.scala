@@ -1,7 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -13,18 +13,13 @@ import graft.kernels.Triangles
   * PLANS.md — the evidence that the engine gets the plans it was designed
   * for: Parquet column pruning + filter pushdown, broadcast vs shuffle
   * joins, map-side partial aggregation, semi-join masks.
-  * Usage: runMain graft.tools.Plans [sfDir] [outFile]
+  * Usage: runMain graft.tools.Plans <sfDir> <outFile>
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val out = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length == 2, "usage: graft.tools.Plans <sfDir> <outFile>")
+    val Array(sfDir, out) = args
+    val spark = graft.Conf.fromEnv().session(8)
 
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the load-bearing queries\n\n")

@@ -53,6 +53,11 @@ class CheckpointSpec extends AnyFunSuite {
     // per-partition lineage sidecar exists and sums to the row count
     val ps = store.partitionStats(spark, snaps.last)
     assert(ps.agg(org.apache.spark.sql.functions.sum("rows")).collect()(0).getLong(0) == v.count())
+    // an uninterrupted checkpointed run takes exactly runExact's steps
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
+    assert(bits(PageRank.resumable(e, v, new SnapshotStore(tmpdir("fresh")), iters = 3)) ==
+      bits(PageRank.runExact(e, v, 3, 0.85)))
   }
 
   test("CC kill-and-resume is bit-identical to the uninterrupted run") {

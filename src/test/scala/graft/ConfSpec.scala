@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft.Conf is the only place the environment is read: bad values fail
-  * at startup naming their variable, and no other main source reads it. */
+  * at startup naming their variable, and no other main source reads it
+  * or builds a session. */
 class ConfSpec extends AnyFunSuite {
 
   test("an empty environment gives the defaults") {
@@ -25,10 +26,12 @@ class ConfSpec extends AnyFunSuite {
     assert(root.isDirectory, s"${root.getAbsolutePath} not found")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val readers = files(root).filter { f =>
+    def mentioning(needles: String*): Seq[String] = files(root).filter { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      src.contains("sys.env") || src.contains("System.getenv")
+      needles.exists(src.contains)
     }.map(f => root.toPath.relativize(f.toPath).toString.replace('\\', '/'))
-    assert(readers == Seq("graft/Conf.scala"))
+    assert(mentioning("sys.env", "System.getenv") == Seq("graft/Conf.scala"))
+    // and only Conf builds a session, so every main gets its settings
+    assert(mentioning("SparkSession.builder") == Seq("graft/Conf.scala"))
   }
 }

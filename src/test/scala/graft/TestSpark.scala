@@ -2,19 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared local session for all suites (forked test JVM). */
+/** Shared local session for all suites (forked test JVM): SPARK_GRAFT_CPUS
+  * cores, and 4 shuffle partitions whatever the core count, so the
+  * fixed-partition-count determinism specs hold at any parallelism. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Conf.fromEnv().session(4)
 
   /** Symmetric edge DataFrame from undirected pairs. */
   def undirected(pairs: Seq[(Long, Long)]): DataFrame = {
