@@ -2,8 +2,10 @@ package graft.checkpoint
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** One committed snapshot of an iteration's state. */
 case class Snapshot(snapshotId: Long, parentId: Long, iteration: Int,
@@ -21,8 +23,9 @@ case class Snapshot(snapshotId: Long, parentId: Long, iteration: Int,
   *    observable between collectives);
   *  - lineage: every manifest carries its parent snapshot id (chain =
   *    iteration lineage) plus a per-partition row-count sidecar
-  *    (partstats parquet), the per-partition bookkeeping CombBLAS keeps as
-  *    LoadImbalance / nnz metrics (reference SpParMat.cpp:773-800);
+  *    (partstats parquet, built from the written files' footers), the
+  *    per-partition bookkeeping CombBLAS keeps as LoadImbalance / nnz
+  *    metrics (reference SpParMat.cpp:773-800);
   *  - metrics: nnz and flops per iteration (reference EstimateFLOP,
   *    ParFriends.h:358-444);
   *  - resume: `latest()` returns the newest VALID manifest; half-written
@@ -40,17 +43,15 @@ class SnapshotStore(root: String) extends Serializable {
     val parent = prev.map(_.snapshotId).getOrElse(-1L)
     val dataPath = s"$root/data-$id"
     df.write.mode("overwrite").parquet(dataPath)
-    // per-partition lineage sidecar (partition id → rows written).
-    // ONE pass over the committed data: the row count is the collected
-    // sidecar's sum, not a second parquet scan.
+    // Per-partition lineage sidecar (partition id → rows written), read
+    // off the written files' Parquet footers on the driver: no second
+    // pass over the data. The row count is the sidecar's sum.
     val spark = df.sparkSession
-    val stats = spark.read.parquet(dataPath)
-      .groupBy(spark_partition_id().as("partitionId"))
-      .agg(count(lit(1)).as("rows"))
-      .persist()
-    stats.write.mode("overwrite").parquet(s"$root/partstats-$id")
-    val rows = stats.agg(coalesce(sum(col("rows")), lit(0L))).first().getLong(0)
-    stats.unpersist(false)
+    val stats = partFiles(spark, dataPath)
+    import spark.implicits._
+    stats.toDF("partitionId", "rows").coalesce(1)
+      .write.mode("overwrite").parquet(s"$root/partstats-$id")
+    val rows = stats.map(_._2).sum
     val json =
       s"""{"snapshotId": $id, "parentId": $parent, "iteration": $iteration,
          | "dataPath": "$dataPath", "rows": $rows, "nnz": $nnz, "flops": $flops,
@@ -94,7 +95,24 @@ class SnapshotStore(root: String) extends Serializable {
   def load(spark: SparkSession, s: Snapshot): DataFrame =
     spark.read.parquet(s.dataPath)
 
-  /** Per-partition lineage sidecar for a snapshot. */
+  /** Per-partition lineage sidecar for a snapshot: one row per written
+    * Parquet file, `partitionId` being the partition of the write task
+    * that wrote it (the number in its `part-NNNNN-…` name) and `rows` the
+    * record count in its footer. */
   def partitionStats(spark: SparkSession, s: Snapshot): DataFrame =
     spark.read.parquet(s"$root/partstats-${s.snapshotId}")
+
+  /** (write-task partition, rows) of every part file under `dir`. */
+  private def partFiles(spark: SparkSession, dir: String): Seq[(Int, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir)
+    path.getFileSystem(conf).listStatus(path).toSeq
+      .filter(_.getPath.getName.startsWith("part-"))
+      .map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        val rows = try reader.getRecordCount finally reader.close()
+        (f.getPath.getName.stripPrefix("part-").takeWhile(_ != '-').toInt, rows)
+      }
+      .sortBy(_._1)
+  }
 }

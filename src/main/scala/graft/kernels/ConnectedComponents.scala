@@ -1,7 +1,8 @@
 package graft.kernels
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.linalg.{Select2ndMin, SpMV}
 
 /** Connected components via FastSV-style min-label iteration
@@ -38,15 +39,20 @@ import graft.linalg.{Select2ndMin, SpMV}
   *  - f ⋈ mngp is fused into one (v, label, mngp) state frame (round 1 of
   *    this engine joined them twice);
   *  - `hooks` (one row per live label) and the shortcut `labelMap` SHRINK
-  *    geometrically: once the live-label count — tracked exactly by the
-  *    convergence scan, and never increasing — drops under the broadcast
-  *    ceiling, hooking and shortcutting become broadcast joins and the
-  *    n-row tables stop shuffling entirely. On a web graph with a giant
-  *    component this happens after round 1, cutting the serial floor from
-  *    ~6 to ~2 exchanges per iteration;
-  *  - convergence = unchanged label sum, one scan of the cached vector
-  *    (the reference's cheap Allreduce test, FastSV.h:364), fused with the
-  *    live-label count in the same aggregate.
+  *    geometrically: once the live-label count — counted by the
+  *    convergence scan until it drops under the broadcast ceiling, and
+  *    never increasing — is under that ceiling, hooking and shortcutting
+  *    become broadcast joins and the n-row tables stop shuffling entirely.
+  *    On a web graph with a giant component this happens after round 1,
+  *    cutting the serial floor from ~6 to ~2 exchanges per iteration;
+  *  - convergence = no label dropped (labels are monotone, so this is the
+  *    reference's unchanged-sum Allreduce test, FastSV.h:364), counted by
+  *    an observed metric of the job that checkpoints the round's vector:
+  *    no job of its own;
+  *  - fixed cost per call: one count of the connected set; the edge count
+  *    runs only for a snapshot store (nnz is a snapshot metric), and the
+  *    per-round deltas are checkpointed and counted only on the shuffle
+  *    path, the one that reads their count.
   */
 object ConnectedComponents {
 
@@ -117,8 +123,14 @@ object ConnectedComponents {
     val isolated = vertices.join(connected, Seq("v"), "left_anti")
     val nVerts = connected.count()
     val bcast = nVerts < broadcastMax
-    val eP = (if (bcast) e else e.repartition(col("src"))).persist()
-    val nnz = eP.count()
+    // The broadcast path reads the caller's edge cache when there is one:
+    // persisting a cached plan again only warns, and the unpersist below
+    // would then drop the caller's entry (the cache matches by plan).
+    val ownCache = !bcast || e.storageLevel == StorageLevel.NONE
+    val eP = if (!bcast) e.repartition(col("src")).persist()
+             else if (ownCache) e.persist() else e
+    // Stored edges, a snapshot metric only.
+    lazy val nnz = eP.count()
     val resumed = store.flatMap(_.latest())
     val f0 = resumed match {
       case Some(s) => cp(store.get.load(edges.sparkSession, s))
@@ -141,30 +153,15 @@ object ConnectedComponents {
       .select(col("v"), col("label"),
         coalesce(col("mngp"), col("label")).as("mngp")))
     cp.free(f0)
-    // Sum as DECIMAL(38) so 10^12 × 10^12-scale ids can't overflow.
-    def scan(df: DataFrame): (java.math.BigDecimal, Long) = {
-      val r = df.agg(sum(col("label").cast("decimal(38,0)")),
-        count_distinct(col("label"))).first()
-      (r.getDecimal(0), r.getLong(1))
-    }
-    // In-loop variant: the frame carries oldLabel, so the changed-vertex
-    // count rides the same one-scan aggregate (it gates the frontier
-    // broadcasts below — labelCount is NOT a bound on it: one surviving
-    // label can still mean millions of vertices that just adopted it).
-    def scan3(df: DataFrame): (java.math.BigDecimal, Long, Long) = {
-      val r = df.agg(sum(col("label").cast("decimal(38,0)")),
-        count_distinct(col("label")),
-        count(when(col("label") =!= col("oldLabel"), 1))).first()
-      (r.getDecimal(0), r.getLong(1), r.getLong(2))
-    }
-    // On resume the convergence state comes from the same one-scan
-    // aggregate over the loaded vector (an extra fixpoint round is a no-op
-    // by label monotonicity, so a run resumed at convergence still ends
-    // with identical labels).
-    var (prevSum, labelCount) = resumed match {
-      case Some(_) => scan(state)
-      case None => (scan(state)._1, nVerts) // live labels never grow
-    }
+    // The live-label count only gates the small-table broadcasts and
+    // never grows, so it is counted (one scan) only while it is at or
+    // above SmallMax. A run resumed at convergence runs one more round, a
+    // no-op by label monotonicity, so its labels are identical.
+    var labelCount = nVerts
+    def liveLabels: Seq[Column] =
+      if (labelCount < SmallMax) Nil else Seq(count_distinct(col("label")))
+    if (resumed.nonEmpty && liveLabels.nonEmpty)
+      labelCount = state.agg(liveLabels.head).first().getLong(0)
     var changed = true
     var it = resumed.map(_.iteration).getOrElse(0)
     val limit = stopAfter.map(s => math.min(s, maxIters)).getOrElse(maxIters)
@@ -188,44 +185,51 @@ object ConnectedComponents {
         .select(col("v").as("pv"), col("hlabel").as("glabel"))
       // (A second pointer-jump per round was tried and measured SLOWER at
       // scale-22 — the extra materialization outweighs the saved rounds.)
+      // The changed-vertex count decides convergence and gates the
+      // frontier broadcasts below (labelCount is NOT a bound on it: one
+      // surviving label can still mean millions of vertices that just
+      // adopted it).
+      val dropped = new Observation()
       val next = cp(hooked.join(small(labelMap), col("hlabel") === col("pv"), "left")
         .select(col("v"), col("oldLabel"), col("mngp"),
-          coalesce(col("glabel"), col("hlabel")).as("label")))
-      val (s, lc, nChanged) = scan3(next)
+          coalesce(col("glabel"), col("hlabel")).as("label"))
+        .observe(dropped, count(when(col("label") =!= col("oldLabel"), 1)).as("n")))
+      val nChanged = dropped.get("n").asInstanceOf[Long]
+      if (liveLabels.nonEmpty) labelCount = next.agg(liveLabels.head).first().getLong(0)
       // 2 flops per stored edge per round: the Select2ndMin compare folded
       // into the maintained mngp merge plus the hook/shortcut min fold.
       store.foreach(_.commit(next.select(col("v"), col("label")), it, nnz, 2L * nnz))
-      changed = s.compareTo(prevSum) != 0
-      prevSum = s
-      labelCount = lc
+      changed = nChanged > 0
       cp.free(state)
       if (changed) {
         // 3. change-vector mngp maintenance: only edges OUT of vertices
         // whose label just dropped can lower a neighbor's mngp. The join
         // streams the cached edge table once (sequential probe against the
         // changed build side — never a re-shuffle of the edges) and the
-        // aggregate sees only O(Σ deg(changed)) rows. deltas is
-        // checkpointed so its ROW COUNT (≤ Σ deg(changed) distinct dsts —
-        // nChanged alone does not bound it through hubs) can pick
-        // broadcast vs shuffle for the state merge for free.
+        // aggregate sees only O(Σ deg(changed)) rows. On the shuffle path
+        // deltas is checkpointed so its ROW COUNT (≤ Σ deg(changed)
+        // distinct dsts — nChanged alone does not bound it through hubs)
+        // can pick broadcast vs shuffle for the state merge for free; the
+        // broadcast path always broadcasts it and needs neither.
         val chg = next.filter(col("label") =!= col("oldLabel"))
           .select(col("v").as("cv"), col("label").as("clabel"))
         val chgJ = if (bcast || nChanged < SmallMax) broadcast(chg)
                    else chg.hint("shuffle_hash")
-        val deltas = cp(eP.join(chgJ, eP("src") === col("cv"))
-          .groupBy(eP("dst").as("v")).agg(min(col("clabel")).as("d")))
-        val dJ = if (bcast || deltas.count() < SmallMax) broadcast(deltas)
-                 else deltas.hint("shuffle_hash")
+        val deltas = eP.join(chgJ, eP("src") === col("cv"))
+          .groupBy(eP("dst").as("v")).agg(min(col("clabel")).as("d"))
+        val dJ = if (bcast) broadcast(deltas) else {
+          val dc = cp(deltas)
+          if (dc.count() < SmallMax) broadcast(dc) else dc.hint("shuffle_hash")
+        }
         state = cp(next.join(dJ, Seq("v"), "left")
           .select(col("v"), col("label"),
             least(col("mngp"), coalesce(col("d"), col("mngp"))).as("mngp")))
-        cp.free(deltas)
-        cp.free(next)
+        cp.freeAllExcept(state, connected)
       } else {
         state = next
       }
     }
-    eP.unpersist(false)
+    if (ownCache) eP.unpersist(false)
     // `isolated` is an anti-join against `connected`, so the final result
     // still reads the connected frame — keep it and the final state; free
     // the superseded per-round frames (already freed in-loop; this catches

@@ -16,6 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: the edge table is persisted ONCE (pre-partitioned by src
   * in the shuffle-join regime) — per round only the label vector moves.
+  * Setup is one scan of the vertex list (count and id range); the edge
+  * cache fills inside round 1, and the edge count runs only for a
+  * snapshot store (nnz is a snapshot metric).
   * The count-then-argmax is two hash aggregates, both map-side combinable:
   * the argmax is a struct-max (count, −label) — lexicographic struct
   * ordering implements the pinned tiebreak with partial aggregation, where
@@ -31,7 +34,8 @@ object LabelPropagation {
     * not shrink with executors, so at-scale runs want the shuffle path). */
   val BroadcastMax = 5000000L
 
-  /** @param edges symmetric (src, dst); @return (vid: long, label: long) */
+  /** @param edges symmetric (src, dst) between `vertices`
+    * @return (vid: long, label: long) */
   def run(edges: DataFrame, vertices: DataFrame, rounds: Int = 5,
           broadcastMax: Long = BroadcastMax): DataFrame =
     lp(edges, vertices, rounds, broadcastMax, None, None)
@@ -52,7 +56,11 @@ object LabelPropagation {
                  store: Option[graft.checkpoint.SnapshotStore],
                  stopAfter: Option[Int]): DataFrame = {
     val cp = new graft.util.Checkpoints(edges.sparkSession)
-    val bcast = vertices.count() < broadcastMax
+    // One scan of the vertex list sizes the broadcast and the id width.
+    // Edge endpoints are vertices, so the vertex ids bound the edge ids
+    // and every label: both are cast to the same width below.
+    val (n, ids) = IdRange.counted(vertices, "v")
+    val bcast = n < broadcastMax
     // Int-pack the persisted edge cache when ids fit 2^31: the per-round
     // join + double aggregate streams this table, and it is DRAM-bound at
     // scale — 8 bytes/edge instead of 16. The label vector is projected to
@@ -60,11 +68,12 @@ object LabelPropagation {
     // reuse of the build-once src partitioning); counts and the struct-max
     // tiebreak are exact integer ops at either width, so results are
     // identical.
-    val idType = if (IdRange.of(edges, "src", "dst").fitsInt) "int" else "bigint"
+    val idType = if (ids.fitsInt) "int" else "bigint"
     val ePacked = edges.select(col("src").cast(idType).as("src"),
       col("dst").cast(idType).as("dst"))
     val e = (if (bcast) ePacked else ePacked.repartition(col("src"))).persist()
-    val nnz = e.count()
+    // Stored edges, a snapshot metric only.
+    lazy val nnz = e.count()
     val resumed = store.flatMap(_.latest())
     var labels = resumed match {
       case Some(s) => cp(store.get.load(edges.sparkSession, s))

@@ -1,6 +1,6 @@
 package graft.kernels
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.checkpoint.SnapshotStore
 
@@ -15,8 +15,12 @@ import graft.checkpoint.SnapshotStore
   * Scale design (the plan you'd want at 1000 executors):
   *  - STATIC operands built once and persisted: the degree-normalized edge
   *    table (w = 1/outdeg — DimApply, reference SpParMat.cpp:801-887) and
-  *    the dangling vertex set. Per iteration only the rank vector moves —
-  *    the analog of building DCSC once (reference SpParMat.cpp:2893);
+  *    one per-vertex table (out-degree, has-in-edge) from ONE aggregate,
+  *    whose single scan gives n, the dangling counts and the id range;
+  *    the dangling and no-in-edge sets are filters of it. Per iteration
+  *    only the rank vector moves — the analog of building DCSC once
+  *    (reference SpParMat.cpp:2893). Setup is two actions per call: the
+  *    per-vertex scan and the edge-cache fill;
   *  - the rank vector is BROADCAST into the SpMV join when it fits
   *    (vertices < broadcastMax): the edge table is never re-shuffled, which
   *    is exactly CombBLAS's dense-vector Allgatherv down the process column
@@ -47,8 +51,8 @@ object PageRank {
     runExact(edges, vertices, iters, d)
       .select(col("v").as("vid"), round(col("r"), 6).as("pr"))
 
-  private case class Ctx(edgesNorm: DataFrame, dangling: DataFrame,
-                         noInbound: DataFrame, verts: DataFrame,
+  private case class Ctx(edgesNorm: DataFrame, deg: DataFrame,
+                         dangling: DataFrame, noInbound: DataFrame,
                          n: Long, nnz: Long, bcast: Boolean,
                          /** persisted edge-cache id width: "int" when every
                            * id fits 2^31 (cuts the per-iteration DRAM scan
@@ -63,18 +67,41 @@ object PageRank {
                            * None → general semi-join path. */
                          isolatedSinks: Option[Long])
 
+  /** Two actions: one over the per-vertex table, one that fills the edge
+    * cache (ScalingBench's prep/iteration split reads the latter). */
   private def prepare(edges: DataFrame, vertices: DataFrame,
                       broadcastMax: Long = BroadcastMax): Ctx = {
-    val n = vertices.count()
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    // (v, outdeg, hasIn, nv) over the edge endpoints and the vertex list;
+    // nv counts v's rows in `vertices`.
+    def side(v: Column, od: Int, in: Int, nv: Int) =
+      Seq(v.as("v"), lit(od).as("od"), lit(in).as("in"), lit(nv).as("nv"))
+    val deg = edges.select(side(col("src"), 1, 0, 0): _*)
+      .unionByName(edges.select(side(col("dst"), 0, 1, 0): _*))
+      .unionByName(vertices.select(side(col("v"), 0, 0, 1): _*))
+      .groupBy(col("v"))
+      .agg(sum(col("od")).as("outdeg"), max(col("in")).as("hasIn"),
+        sum(col("nv")).as("nv"))
+      .persist()
+    val inV = col("nv") > 0
+    val isSink = inV && col("outdeg") === 0
+    val endpoint = col("outdeg") > 0 || col("hasIn") > 0
+    val stats = deg.agg(coalesce(sum(col("nv")), lit(0L)),
+      count(when(isSink, 1)), count(when(isSink && col("hasIn") > 0, 1)),
+      coalesce(min(when(endpoint, col("v"))), lit(0L)),
+      coalesce(max(when(endpoint, col("v"))), lit(-1L))).first()
+    val (n, kDangling, danglingWithIn) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
     // Int-pack when ids fit: (src, dst, od) as 3 ints = 12 bytes/edge in
     // the columnar cache vs (long, long, double)'s 24. w = 1.0/od computed
     // at scan time is the SAME double the old cache stored, so results are
     // bit-identical; the division is pipelined compute on a scan that is
     // DRAM-bandwidth-bound, so halving the bytes is a straight win.
-    val idType = if (IdRange.of(edges, "src", "dst").fitsInt) "int" else "bigint"
+    val idType = if (IdRange(stats.getLong(3), stats.getLong(4)).fitsInt) "int" else "bigint"
     // Pre-partitioned by src ONCE: in the shuffle-join path only the rank
     // vector moves per iteration (the 2D-distribution-built-once analog).
+    // The out-degree is joined from its own aggregate, not from `deg`:
+    // this join's plan, and with it each partition's edge order and so
+    // the add order of every contribution sum, stays what it always was.
+    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val edgesNorm = edges.join(outdeg, "src")
       .select(col("src").cast(idType).as("src"),
         col("dst").cast(idType).as("dst"),
@@ -82,24 +109,15 @@ object PageRank {
       .repartition(col("src"))
       .persist()
     val nnz = edgesNorm.count()
-    val verts = vertices.persist()
-    val dangling = verts
-      .join(outdeg.select(col("src").as("v")), Seq("v"), "left_anti").persist()
-    dangling.count()
+    // Broadcast by its exact size, not by the estimate of all of `deg`.
+    val sinks = deg.filter(isSink).select(col("v"))
     // Vertices with no in-edges are STATIC: their new rank needs no join,
     // only the per-iteration sink scalar — so the assembly is a union, not
     // a verts-wide join.
-    val noInbound = verts
-      .join(edges.select(col("dst").as("v")).distinct(), Seq("v"), "left_anti")
-      .persist()
-    noInbound.count()
-    val kDangling = dangling.count()
-    val danglingWithIn = dangling
-      .join(edges.select(col("dst").as("v")).distinct(), Seq("v"), "left_semi")
-      .count()
+    val noInbound = deg.filter(inV && col("hasIn") === 0).select(col("v"))
     val iso = if (danglingWithIn == 0) Some(kDangling) else None
-    Ctx(edgesNorm, dangling, noInbound, verts, n, nnz, n < broadcastMax,
-      idType, iso)
+    Ctx(edgesNorm, deg, if (kDangling < broadcastMax) broadcast(sinks) else sinks,
+      noInbound, n, nnz, n < broadcastMax, idType, iso)
   }
 
   /** One synchronous iteration (pure function of the previous vector).
@@ -165,7 +183,7 @@ object PageRank {
     var pr = resumed match {
       case Some(s) => cp(store.get.load(spark, s))
       case None =>
-        val init = cp(ctx.verts.select(col("v"), lit(1.0 / ctx.n).as("r")))
+        val init = cp(vertices.select(col("v"), lit(1.0 / ctx.n).as("r")))
         store.foreach(_.commit(init, 0, ctx.nnz, 0L))
         init
     }
@@ -185,8 +203,7 @@ object PageRank {
       store.foreach(_.commit(pr, iter, ctx.nnz, 2L * ctx.nnz))
       cp.free(prev)
     }
-    ctx.edgesNorm.unpersist(false); ctx.dangling.unpersist(false)
-    ctx.noInbound.unpersist(false); ctx.verts.unpersist(false)
+    ctx.edgesNorm.unpersist(false); ctx.deg.unpersist(false)
     cp.freeAllExcept(pr)
     pr
   }

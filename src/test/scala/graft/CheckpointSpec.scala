@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.checkpoint.SnapshotStore
 import graft.kernels.PageRank
@@ -50,9 +51,17 @@ class CheckpointSpec extends AnyFunSuite {
     assert(snaps.last.nnz == nnz)
     assert(snaps.last.flops == 2 * nnz)
     assert(snaps.last.rows == v.count())
-    // per-partition lineage sidecar exists and sums to the row count
-    val ps = store.partitionStats(spark, snaps.last)
-    assert(ps.agg(org.apache.spark.sql.functions.sum("rows")).collect()(0).getLong(0) == v.count())
+    // per-partition lineage sidecar: one row per written part file (keyed
+    // by the write task's partition), summing to the row count
+    val ps = store.partitionStats(spark, snaps.last).collect()
+      .map(r => r.getInt(0) -> r.getLong(1))
+    val parts = Files.list(Paths.get(snaps.last.dataPath))
+    val partIds = try parts.iterator.asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).map(_.slice(5, 10).toInt).toSeq.sorted
+      finally parts.close()
+    assert(partIds.nonEmpty)
+    assert(ps.map(_._1).toSeq.sorted == partIds)
+    assert(ps.map(_._2).sum == snaps.last.rows)
     // an uninterrupted checkpointed run takes exactly runExact's steps
     def bits(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap

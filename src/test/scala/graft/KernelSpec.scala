@@ -111,6 +111,15 @@ class KernelSpec extends AnyFunSuite {
     val arrSmallBlocks = asMap(graft.kernels.BlockCC.run(e, v,
       pairs.flatMap(p => Seq(p._1, p._2)).max, blockSize = 32))
     assert(arrSmallBlocks == rel)
+    // edge-free graph: every vertex is its own component on every path
+    val none = e.limit(0)
+    val own = asMap(v.select(v("v"), v("v")))
+    assert(asMap(ConnectedComponents.run(none, v)) == own, "array path, no edges")
+    assert(asMap(ConnectedComponents.run(none, v, arrayMax = 0L)) == own,
+      "relational path, no edges")
+    assert(asMap(ConnectedComponents.resumable(none, v, new graft.checkpoint.SnapshotStore(
+      java.nio.file.Files.createTempDirectory("graft-cc-empty").toString))) == own,
+      "resumable, no edges")
   }
 
   test("BFS: bottom-up, shuffle top-down, and adaptive paths all agree") {

@@ -79,4 +79,20 @@ class StorageHygieneSpec extends AnyFunSuite {
   test("MIS retains only the result frame") {
     assert(leakedBy(MaximalIndependentSet.run(edges, verts)) <= 1)
   }
+
+  test("pagerank, connected components and label propagation keep the caller's caches") {
+    // The cache manager matches entries by plan, so a kernel that
+    // persists and later unpersists its caller's frame drops the caller's
+    // cache with it.
+    val (e, v) = (edges.persist(), verts.persist())
+    e.count(); v.count()
+    try {
+      PageRank.run(e, v, iters = 2).count()
+      ConnectedComponents.run(e, v, arrayMax = 0L).count()
+      LabelPropagation.run(e, v, rounds = 1).count()
+      val none = org.apache.spark.storage.StorageLevel.NONE
+      assert(e.storageLevel != none, "edges no longer cached")
+      assert(v.storageLevel != none, "vertices no longer cached")
+    } finally { e.unpersist(true); v.unpersist(true) }
+  }
 }
