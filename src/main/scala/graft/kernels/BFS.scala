@@ -1,6 +1,6 @@
 package graft.kernels
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Direction-optimizing BFS — the reference's flagship Graph500 kernel
@@ -75,57 +75,9 @@ object BFS {
       if (root >= 0 && ids.min >= 0 && ids.max >= BitmapMin && ids.max < bitmapMax)
         return BlockBFS.levels(edges, root, maxDepth)
     }
-    val cp = new graft.util.Checkpoints(spark)
-    // Static operands built once: the edge table and the probe universe
-    // (every vertex with at least one in-edge — symmetric edges, so src
-    // covers it; isolated vertices are unreachable by construction).
-    val e = edges.select("src", "dst").persist()
-    val universe = e.select(col("src").as("v")).distinct().persist()
-    val nAll = universe.count()
-
-    var visited = cp(Seq((root, 0L)).toDF("v", "dist"))
-    var frontier = visited.select("v")
-    var frontierBack: DataFrame = null
-    var depth = 0
-    var frontierSize = 1L
-    var visitedCount = 1L
-    while (frontierSize > 0 && depth < maxDepth) {
-      depth += 1
-      val unvisitedCount = nAll - visitedCount // upper bound on reachable-unvisited
-      val nextV =
-        if (unvisitedCount <= alpha * frontierSize) {
-          // bottom-up: unvisited probe their in-edges for a fringe parent
-          val unvisited = universe.join(visited.select("v"), Seq("v"), "left_anti")
-          e.join(unvisited.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
-            .join(frontier.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
-            .select(col("dst").as("v")).distinct()
-        } else {
-          // top-down SpMSpV: adaptive broadcast of the sparse fringe
-          val fsrc = frontier.withColumnRenamed("v", "src")
-          val fx = if (frontierSize < broadcastMax) broadcast(fsrc)
-                   else fsrc.hint("shuffle_hash")
-          e.join(fx, Seq("src"), "left_semi")
-            .select(col("dst").as("v")).distinct()
-            .join(visited.select("v"), Seq("v"), "left_anti")
-        }
-      val next = cp(nextV.withColumn("dist", lit(depth.toLong)))
-      frontierSize = next.count()
-      if (frontierSize > 0) {
-        val prev = visited
-        visited = cp(visited.union(next))
-        visitedCount += frontierSize
-        cp.free(prev)
-        // the previous level's frame fed nextV, which is materialized now
-        if (frontierBack ne null) cp.free(frontierBack)
-        frontierBack = next
-        frontier = next.select("v")
-      } else cp.free(next)
-    }
-    e.unpersist(false); universe.unpersist(false)
-    // The per-level `next` frames are freed here; only the final visited
-    // frame (the result) stays materialized for the caller.
-    cp.freeAllExcept(visited)
-    visited.select(col("v").as("vid"), col("dist"))
+    fringeLoop(Seq((root, 0L)).toDF("v", "dist"), edges, maxDepth,
+      broadcastMax, alpha, parentAgg = None)
+      .select(col("v").as("vid"), col("dist"))
   }
 
   /** BFS parent tree from `root` — the reference's BFS contract
@@ -152,12 +104,38 @@ object BFS {
               pickMax: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val cp = new graft.util.Checkpoints(spark)
-    val e = edges.select("src", "dst").persist()
-    val universe = e.select(col("src").as("v")).distinct().persist()
+    val parentAgg = seed match {
+      case Some(s) =>
+        min(struct(md5(concat_ws(":", lit(s), col("src"))).as("pri"),
+          col("src"))).getField("src").as("parent")
+      case None =>
+        // pickMax mirrors the SelectMaxSRing parent pick of the
+        // SingleChildBFS driver (reference SingleChildBFS.cpp:118,277)
+        if (pickMax) max(col("src")).as("parent")
+        else min(col("src")).as("parent")
+    }
+    fringeLoop(Seq((root, root, 0L)).toDF("v", "parent", "dist"), edges,
+      maxDepth, broadcastMax, alpha, Some(parentAgg))
+      .select(col("v").as("vid"), col("parent"), col("dist"))
+  }
+
+  /** The direction-optimizing loop of [[levels]] and [[parents]], from
+    * the one-row visited frame `start` (v, [parent,] dist). Each level
+    * takes the edges out of the fringe, then either the distinct dsts
+    * (`parentAgg = None`) or one `parentAgg` over the srcs per dst.
+    * @return visited (v, [parent,] dist), materialized */
+  private def fringeLoop(start: DataFrame, edges: DataFrame, maxDepth: Int,
+                         broadcastMax: Long, alpha: Double,
+                         parentAgg: Option[Column]): DataFrame = {
+    val cp = new graft.util.Checkpoints(edges.sparkSession)
+    // Static operands built once: the edge table and the probe universe
+    // (every vertex with at least one in-edge — symmetric edges, so src
+    // covers it; isolated vertices are unreachable by construction).
+    val e = cp.cache(edges.select("src", "dst"))
+    val universe = cp.cache(e.select(col("src").as("v")).distinct())
     val nAll = universe.count()
 
-    var visited = cp(Seq((root, root, 0L)).toDF("v", "parent", "dist"))
+    var visited = cp(start)
     var frontier = visited.select("v")
     var frontierBack: DataFrame = null
     var depth = 0
@@ -165,47 +143,47 @@ object BFS {
     var visitedCount = 1L
     while (frontierSize > 0 && depth < maxDepth) {
       depth += 1
-      val unvisitedCount = nAll - visitedCount
-      val candidates =
-        if (unvisitedCount <= alpha * frontierSize) {
-          // bottom-up: unvisited probe in-edges for any fringe parent
+      val unvisitedCount = nAll - visitedCount // upper bound on reachable-unvisited
+      val bottomUp = unvisitedCount <= alpha * frontierSize
+      val fringeEdges =
+        if (bottomUp) {
+          // unvisited probe their in-edges for a fringe parent
           val unvisited = universe.join(visited.select("v"), Seq("v"), "left_anti")
           e.join(unvisited.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
             .join(frontier.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
         } else {
+          // top-down SpMSpV: adaptive broadcast of the sparse fringe
           val fsrc = frontier.withColumnRenamed("v", "src")
           val fx = if (frontierSize < broadcastMax) broadcast(fsrc)
                    else fsrc.hint("shuffle_hash")
-          e.join(fx, Seq("src"))
+          e.join(fx, Seq("src"), "left_semi")
         }
-      val parentAgg = seed match {
-        case Some(s) =>
-          min(struct(md5(concat_ws(":", lit(s), col("src"))).as("pri"),
-            col("src"))).getField("src").as("parent")
-        case None =>
-          // pickMax mirrors the SelectMaxSRing parent pick of the
-          // SingleChildBFS driver (reference SingleChildBFS.cpp:118,277)
-          if (pickMax) max(col("src")).as("parent")
-          else min(col("src")).as("parent")
+      val reached = parentAgg match {
+        case None => fringeEdges.select(col("dst").as("v")).distinct()
+        case Some(agg) => fringeEdges.groupBy(col("dst").as("v")).agg(agg)
       }
-      val next = cp(candidates
-        .groupBy(col("dst").as("v")).agg(parentAgg)
-        .join(visited.select("v"), Seq("v"), "left_anti")
-        .withColumn("dist", lit(depth.toLong)))
+      // bottom-up reaches only unvisited vertices; top-down must exclude
+      // the visited ones
+      val nextV = if (bottomUp) reached
+                  else reached.join(visited.select("v"), Seq("v"), "left_anti")
+      val next = cp(nextV.withColumn("dist", lit(depth.toLong)))
       frontierSize = next.count()
       if (frontierSize > 0) {
         val prev = visited
         visited = cp(visited.union(next))
         visitedCount += frontierSize
         cp.free(prev)
+        // the previous level's frame fed nextV, which is materialized now
         if (frontierBack ne null) cp.free(frontierBack)
         frontierBack = next
         frontier = next.select("v")
       } else cp.free(next)
     }
-    e.unpersist(false); universe.unpersist(false)
+    // Frees the edge and universe caches made here and the per-level
+    // `next` frames; only the final visited frame (the result) stays
+    // materialized for the caller.
     cp.freeAllExcept(visited)
-    visited.select(col("v").as("vid"), col("parent"), col("dist"))
+    visited
   }
 
   /** Single-child BFS (reference Applications/SingleChildBFS.cpp:273-285):
@@ -243,7 +221,8 @@ object BFS {
   def validateParents(edges: DataFrame, tree: DataFrame, root: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val t = tree.select(col("vid"), col("parent"), col("dist")).persist()
+    val cp = new graft.util.Checkpoints(spark)
+    val t = cp.cache(tree.select(col("vid"), col("parent"), col("dist")))
     val rootRows = t.where(col("vid") === root)
     val rootBad = rootRows.where(col("parent") =!= root || col("dist") =!= 0L)
       .count() + (if (rootRows.count() == 1L) 0L else 1L)
@@ -260,7 +239,7 @@ object BFS {
       .where(abs(col("sd") - col("dd")) > 1L).count()
     val reachBad = edges.join(d1, Seq("src"))
       .join(t.select(col("vid").as("dst")), Seq("dst"), "left_anti").count()
-    t.unpersist(false)
+    cp.freeAll()
     Seq(("root_ok", rootBad), ("level_ok", levelBad),
       ("tree_edge_ok", treeEdgeBad), ("span_ok", spanBad),
       ("reach_ok", reachBad)).toDF("check", "violations")

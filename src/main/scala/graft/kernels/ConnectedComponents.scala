@@ -2,7 +2,6 @@ package graft.kernels
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.linalg.{Select2ndMin, SpMV}
 
 /** Connected components via FastSV-style min-label iteration
@@ -123,12 +122,8 @@ object ConnectedComponents {
     val isolated = vertices.join(connected, Seq("v"), "left_anti")
     val nVerts = connected.count()
     val bcast = nVerts < broadcastMax
-    // The broadcast path reads the caller's edge cache when there is one:
-    // persisting a cached plan again only warns, and the unpersist below
-    // would then drop the caller's entry (the cache matches by plan).
-    val ownCache = !bcast || e.storageLevel == StorageLevel.NONE
-    val eP = if (!bcast) e.repartition(col("src")).persist()
-             else if (ownCache) e.persist() else e
+    // The broadcast path reads the caller's edge cache when there is one.
+    val eP = cp.cache(if (!bcast) e.repartition(col("src")) else e)
     // Stored edges, a snapshot metric only.
     lazy val nnz = eP.count()
     val resumed = store.flatMap(_.latest())
@@ -224,16 +219,16 @@ object ConnectedComponents {
         state = cp(next.join(dJ, Seq("v"), "left")
           .select(col("v"), col("label"),
             least(col("mngp"), coalesce(col("d"), col("mngp"))).as("mngp")))
-        cp.freeAllExcept(state, connected)
+        cp.freeAllExcept(state, connected, eP)
       } else {
         state = next
       }
     }
-    if (ownCache) eP.unpersist(false)
     // `isolated` is an anti-join against `connected`, so the final result
     // still reads the connected frame — keep it and the final state; free
-    // the superseded per-round frames (already freed in-loop; this catches
-    // the initial state when the loop ran zero rounds).
+    // the edge cache and the superseded per-round frames (already freed
+    // in-loop; this catches the initial state when the loop ran zero
+    // rounds).
     cp.freeAllExcept(state, connected)
     state.select(col("v"), col("label"))
       .unionByName(isolated.select(col("v"), col("v").as("label")))

@@ -60,7 +60,7 @@ object MaximumMatching {
                   init: Option[DataFrame] = None)
       : (DataFrame, (Int, Int, Int)) = {
     val cp = new graft.util.Checkpoints(edges.sparkSession)
-    val e = edges.select("r", "c").persist()
+    val e = cp.cache(edges.select("r", "c"))
     e.count()
     val cols = cp(e.select("c").distinct())
     var mate = cp(init.getOrElse(BipartiteMatching.run(e)).select("r", "c"))
@@ -131,7 +131,6 @@ object MaximumMatching {
       augMax = math.max(augMax, steps)
       cp.free(aug); cp.free(parents); cp.free(leaves)
     }
-    e.unpersist(false)
     cp.freeAllExcept(mate)
     (mate.select("r", "c"), (phase, layersMax, augMax))
   }

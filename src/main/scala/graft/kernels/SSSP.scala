@@ -46,7 +46,7 @@ object SSSP {
     val spark = edges.sparkSession
     import spark.implicits._
     val cp = new graft.util.Checkpoints(spark)
-    val e = edges.select("src", "dst", "w").persist()
+    val e = cp.cache(edges.select("src", "dst", "w"))
     e.count()
     var dist = cp(Seq((root, init)).toDF("v", "d"))
     var frontier = dist
@@ -72,7 +72,6 @@ object SSSP {
         frontier = improved
       } else cp.free(improved)
     }
-    e.unpersist(false)
     cp.freeAllExcept(dist)
     dist.select(col("v").as("vid"), col("d").as("dist"))
   }

@@ -45,7 +45,7 @@ object WeightedCycleMatching {
     *         weight-increasing 4-cycle left (if converged within rounds) */
   def run(edges: DataFrame, init: DataFrame, rounds: Int = 10): DataFrame = {
     val cp = new graft.util.Checkpoints(edges.sparkSession)
-    val e = edges.select("r", "c", "w").persist()
+    val e = cp.cache(edges.select("r", "c", "w"))
     e.count()
     var mate = cp(init.select("r", "c"))
     var improved = true
@@ -100,7 +100,6 @@ object WeightedCycleMatching {
       }
       cp.free(winners)
     }
-    e.unpersist(false)
     cp.freeAllExcept(mate)
     mate.select("r", "c")
   }

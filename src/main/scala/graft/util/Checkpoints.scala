@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Tracked lineage truncation for iterative kernels.
   *
@@ -18,7 +19,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `df.localCheckpoint()`; `cp.free(prev)` when a round's frame is
   * superseded; `cp.freeAllExcept(result)` before returning (the returned
   * frame stays materialized for the caller; once the caller drops it the
-  * ContextCleaner reclaims that last RDD).
+  * ContextCleaner reclaims that last RDD). `cp.cache(df)` in place of
+  * `df.persist()` for a static operand: it persists only a frame whose
+  * plan the caller has not cached, and `free`/`freeAllExcept` release
+  * only what it persisted. The cache manager matches entries by plan, so
+  * persisting a cached plan again only warns, and unpersisting it would
+  * drop the caller's entry.
   *
   * Id attribution reads the backing RDD directly off the checkpointed
   * frame's `LogicalRDD` leaf — exact, so two instances running
@@ -78,6 +84,8 @@ object Checkpoints {
 final class Checkpoints(spark: SparkSession) {
   private val sc = spark.sparkContext
   private val owned = new java.util.IdentityHashMap[DataFrame, Array[Int]]()
+  private val cached = java.util.Collections.newSetFromMap(
+    new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]())
 
   /** localCheckpoint + record the backing RDD ids of the new frame
     * (exact — read from the frame's own plan, never global diffing). */
@@ -89,10 +97,19 @@ final class Checkpoints(spark: SparkSession) {
     out
   }
 
-  /** Free the backing RDDs of a tracked frame (no-op for untracked). */
+  /** Persist `df` unless its plan is already cached (then the caller
+    * owns that cache and it is used as is). */
+  def cache(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) cached.add(df.persist())
+    df
+  }
+
+  /** Free the backing RDDs of a tracked frame, or unpersist a frame
+    * `cache` persisted (no-op for untracked). */
   def free(df: DataFrame): Unit = {
     val ids = owned.remove(df)
     if (ids != null) unpersistIds(ids)
+    if (cached.remove(df)) df.unpersist(false)
   }
 
   /** Free every tracked frame except the given ones (typically the
@@ -105,6 +122,11 @@ final class Checkpoints(spark: SparkSession) {
     while (it.hasNext) {
       val e = it.next()
       if (!keepSet.contains(e.getKey)) { unpersistIds(e.getValue); it.remove() }
+    }
+    cached.removeIf { df =>
+      val drop = !keepSet.contains(df)
+      if (drop) df.unpersist(false)
+      drop
     }
   }
 

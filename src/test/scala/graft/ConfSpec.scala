@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** graft.Conf is the only place the environment is read: bad values fail
   * at startup naming their variable, and no other main source reads it
-  * or builds a session. */
+  * or builds a session. An unknown ScalingBench leg fails the same way,
+  * before a session starts. */
 class ConfSpec extends AnyFunSuite {
 
   test("an empty environment gives the defaults") {
@@ -19,6 +20,14 @@ class ConfSpec extends AnyFunSuite {
       val e = intercept[IllegalArgumentException](Conf.parse(Map(name -> bad)))
       assert(e.getMessage.contains(name), s"$name=$bad: ${e.getMessage}")
     }
+  }
+
+  test("an unknown ScalingBench leg raises an error listing the valid legs") {
+    assert(ScalingBench.legs.size == 16)
+    assert(ScalingBench.leg("plain").needsGraph)
+    val e = intercept[IllegalArgumentException](ScalingBench.leg("no_such_leg"))
+    for (name <- ScalingBench.legs.keys)
+      assert(e.getMessage.contains(name), s"$name missing: ${e.getMessage}")
   }
 
   test("only graft/Conf.scala reads the environment under src/main/scala") {

@@ -80,19 +80,47 @@ class StorageHygieneSpec extends AnyFunSuite {
     assert(leakedBy(MaximalIndependentSet.run(edges, verts)) <= 1)
   }
 
-  test("pagerank, connected components and label propagation keep the caller's caches") {
-    // The cache manager matches entries by plan, so a kernel that
-    // persists and later unpersists its caller's frame drops the caller's
-    // cache with it.
-    val (e, v) = (edges.persist(), verts.persist())
-    e.count(); v.count()
+  /** Cache `frames`, run `kernels`, and assert every frame is still
+    * cached. The cache manager matches entries by plan, so a kernel that
+    * persists and later unpersists its caller's frame drops the caller's
+    * cache with it. */
+  private def keepsCaches(frames: (String, org.apache.spark.sql.DataFrame)*)
+                         (kernels: => Unit): Unit = {
+    frames.foreach { case (_, df) => df.persist().count() }
     try {
+      kernels
+      for ((name, df) <- frames)
+        assert(df.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+          s"$name no longer cached")
+    } finally frames.foreach(_._2.unpersist(true))
+  }
+
+  test("pagerank, connected components and label propagation keep the caller's caches") {
+    val (e, v) = (edges, verts)
+    keepsCaches("edges" -> e, "vertices" -> v) {
       PageRank.run(e, v, iters = 2).count()
       ConnectedComponents.run(e, v, arrayMax = 0L).count()
       LabelPropagation.run(e, v, rounds = 1).count()
-      val none = org.apache.spark.storage.StorageLevel.NONE
-      assert(e.storageLevel != none, "edges no longer cached")
-      assert(v.storageLevel != none, "vertices no longer cached")
-    } finally { e.unpersist(true); v.unpersist(true) }
+    }
+  }
+
+  test("relational BFS, its validator, SSSP and the matchings keep the caller's caches") {
+    val s = spark
+    import s.implicits._
+    val e = edges
+    val we = e.withColumn("w", (col("src") % 5 + 1).cast("double"))
+    val be = pairs.map { case (a, b) => (a, b + 1000L) }.distinct.toDF("r", "c")
+    val bw = be.withColumn("w", ((col("r") + col("c")) % 7 + 1).cast("double"))
+    val root = pairs.map(_._1).min
+    val tree = BFS.parents(e, root)
+    keepsCaches("edges" -> e, "weighted edges" -> we, "bipartite edges" -> be,
+        "weighted bipartite edges" -> bw, "bfs tree" -> tree) {
+      BFS.levels(e, root, bitmapMax = 0L).count()
+      BFS.parents(e, root).count()
+      BFS.validateParents(e, tree, root).count()
+      SSSP.run(we, root).count()
+      val mate = MaximumMatching.run(be)
+      WeightedCycleMatching.run(bw, mate).count()
+    }
   }
 }
