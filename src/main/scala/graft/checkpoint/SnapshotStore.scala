@@ -10,7 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** One committed snapshot of an iteration's state. */
 case class Snapshot(snapshotId: Long, parentId: Long, iteration: Int,
                     dataPath: String, rows: Long, nnz: Long, flops: Long,
-                    createdAtMs: Long)
+                    createdAtMs: Long,
+                    /** (write-task partition, rows) of every part file */
+                    partitions: Seq[(Int, Long)])
 
 /** Iceberg-style table layer: Parquet data + an atomic JSON manifest per
   * commit (no Iceberg runtime jar in this environment — SURVEY.md §7).
@@ -22,10 +24,10 @@ case class Snapshot(snapshotId: Long, parentId: Long, iteration: Int,
   *    state (the reference's analog: per-iteration vectors are only
   *    observable between collectives);
   *  - lineage: every manifest carries its parent snapshot id (chain =
-  *    iteration lineage) plus a per-partition row-count sidecar
-  *    (partstats parquet, built from the written files' footers), the
-  *    per-partition bookkeeping CombBLAS keeps as LoadImbalance / nnz
-  *    metrics (reference SpParMat.cpp:773-800);
+  *    iteration lineage) plus the row count of every part file, read off
+  *    the written files' footers — as an Iceberg manifest keeps record
+  *    counts per data file — the per-partition bookkeeping CombBLAS keeps
+  *    as LoadImbalance / nnz metrics (reference SpParMat.cpp:773-800);
   *  - metrics: nnz and flops per iteration (reference EstimateFLOP,
   *    ParFriends.h:358-444);
   *  - resume: `latest()` returns the newest VALID manifest; half-written
@@ -43,18 +45,15 @@ class SnapshotStore(root: String) extends Serializable {
     val parent = prev.map(_.snapshotId).getOrElse(-1L)
     val dataPath = s"$root/data-$id"
     df.write.mode("overwrite").parquet(dataPath)
-    // Per-partition lineage sidecar (partition id → rows written), read
-    // off the written files' Parquet footers on the driver: no second
-    // pass over the data. The row count is the sidecar's sum.
-    val spark = df.sparkSession
-    val stats = partFiles(spark, dataPath)
-    import spark.implicits._
-    stats.toDF("partitionId", "rows").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/partstats-$id")
-    val rows = stats.map(_._2).sum
+    // Per-partition lineage (partition id → rows written), read off the
+    // written files' Parquet footers on the driver: no second pass over
+    // the data and no second write. The row count is its sum.
+    val parts = partFiles(df.sparkSession, dataPath)
+    val rows = parts.map(_._2).sum
     val json =
       s"""{"snapshotId": $id, "parentId": $parent, "iteration": $iteration,
          | "dataPath": "$dataPath", "rows": $rows, "nnz": $nnz, "flops": $flops,
+         | "partitions": [${parts.map { case (p, r) => s"[$p, $r]" }.mkString(", ")}],
          | "createdAtMs": ${System.currentTimeMillis()}}""".stripMargin
     val tmp = Paths.get(root, s".manifest-$id.tmp")
     Files.writeString(tmp, json)
@@ -67,13 +66,19 @@ class SnapshotStore(root: String) extends Serializable {
   private def parseString(json: String, key: String): Option[String] =
     s""""$key"\\s*:\\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
 
+  private def parsePairs(json: String, key: String): Option[Seq[(Int, Long)]] =
+    s""""$key"\\s*:\\s*\\[([\\[\\]\\d\\s,]*)\\]""".r.findFirstMatchIn(json).map(m =>
+      """\[\s*(\d+)\s*,\s*(\d+)\s*\]""".r.findAllMatchIn(m.group(1))
+        .map(p => (p.group(1).toInt, p.group(2).toLong)).toSeq)
+
   private def parse(json: String): Option[Snapshot] =
     for {
       id <- parseLong(json, "snapshotId"); parent <- parseLong(json, "parentId")
       iter <- parseLong(json, "iteration"); path <- parseString(json, "dataPath")
       rows <- parseLong(json, "rows"); nnz <- parseLong(json, "nnz")
-      flops <- parseLong(json, "flops"); ts <- parseLong(json, "createdAtMs")
-    } yield Snapshot(id, parent, iter.toInt, path, rows, nnz, flops, ts)
+      flops <- parseLong(json, "flops"); parts <- parsePairs(json, "partitions")
+      ts <- parseLong(json, "createdAtMs")
+    } yield Snapshot(id, parent, iter.toInt, path, rows, nnz, flops, ts, parts)
 
   /** Newest valid snapshot, tolerating garbage/torn manifests. */
   def latest(): Option[Snapshot] = snapshots().lastOption
@@ -95,12 +100,14 @@ class SnapshotStore(root: String) extends Serializable {
   def load(spark: SparkSession, s: Snapshot): DataFrame =
     spark.read.parquet(s.dataPath)
 
-  /** Per-partition lineage sidecar for a snapshot: one row per written
-    * Parquet file, `partitionId` being the partition of the write task
-    * that wrote it (the number in its `part-NNNNN-…` name) and `rows` the
-    * record count in its footer. */
-  def partitionStats(spark: SparkSession, s: Snapshot): DataFrame =
-    spark.read.parquet(s"$root/partstats-${s.snapshotId}")
+  /** Per-partition lineage of a snapshot, from its manifest: one row per
+    * written Parquet file, `partitionId` being the partition of the write
+    * task that wrote it (the number in its `part-NNNNN-…` name) and `rows`
+    * the record count in its footer. */
+  def partitionStats(spark: SparkSession, s: Snapshot): DataFrame = {
+    import spark.implicits._
+    s.partitions.toDF("partitionId", "rows")
+  }
 
   /** (write-task partition, rows) of every part file under `dir`. */
   private def partFiles(spark: SparkSession, dir: String): Seq[(Int, Long)] = {

@@ -13,9 +13,11 @@ import graft.linalg.{Select2ndMin, SpMV}
   *      scatter-with-min-reduction of reference CC.h:746-1028 `Assign`; the
   *      candidate is folded back to EVERY tree member in the same join
   *      (hook + spread fused):  f'(v) = min(f(v), mngp(v), cand(f(v)))
-  *   3. shortcut : f''(v) = f'(f'(v))                    — pointer jumping
+  *   3. shortcut : f''(v) = min(f'(f'(v)), cand(f'(v)))  — pointer jumping
   *      (reference FastSV.h:359-366 `Extract` gather), realized against the
-  *      LABEL-RESTRICTED map only (one row per live label, not per vertex).
+  *      LABEL-RESTRICTED map only (one row per live label, not per vertex);
+  *      the jump target's own candidate rides along, read from the same
+  *      broadcast `hooks` table as step 2.
   *
   * Per-vertex labels are monotone non-increasing and component-closed, so
   * the fixpoint is the exact min vertex id per component — LACC `LabelCC`
@@ -36,7 +38,11 @@ import graft.linalg.{Select2ndMin, SpMV}
   *    exists only while the frontier is dense. Values are integer mins,
   *    so per-round labels are bit-identical to the full recompute;
   *  - f ⋈ mngp is fused into one (v, label, mngp) state frame (round 1 of
-  *    this engine joined them twice);
+  *    this engine joined them twice); the first mngp is the same
+  *    maintenance step with every vertex counted as changed, so setup and
+  *    every round share one set of plans (each distinct whole-stage plan
+  *    compiles twice per call, under the driver's and the executor's class
+  *    loaders);
   *  - `hooks` (one row per live label) and the shortcut `labelMap` SHRINK
   *    geometrically: once the live-label count — counted by the
   *    convergence scan until it drops under the broadcast ceiling, and
@@ -48,10 +54,12 @@ import graft.linalg.{Select2ndMin, SpMV}
   *    reference's unchanged-sum Allreduce test, FastSV.h:364), counted by
   *    an observed metric of the job that checkpoints the round's vector:
   *    no job of its own;
-  *  - fixed cost per call: one count of the connected set; the edge count
-  *    runs only for a snapshot store (nnz is a snapshot metric), and the
-  *    per-round deltas are checkpointed and counted only on the shuffle
-  *    path, the one that reads their count.
+  *  - fixed cost per call: one checkpoint of the connected set, whose
+  *    observed metric counts it; the edge count runs only for a snapshot
+  *    store (nnz is a snapshot metric), and the per-round deltas are
+  *    checkpointed and counted only on the shuffle path, the one that
+  *    reads their count. Isolated vertices join the result in one left
+  *    join at the end.
   */
 object ConnectedComponents {
 
@@ -112,42 +120,31 @@ object ConnectedComponents {
                      stopAfter: Option[Int]): DataFrame = {
     val cp = new graft.util.Checkpoints(edges.sparkSession)
     val e = edges.select("src", "dst")
-    // Isolated vertices are their own component by construction and can
-    // never change label — iterating over them only pads every per-round
-    // table AND keeps the live-label count pinned above the broadcast
-    // ceiling (on RMAT/web graphs a third of the id space is isolated, so
-    // without this the hooks/label-map tables never become broadcastable).
-    val connected = cp(vertices
-      .join(e.select(col("src").as("v")), Seq("v"), "left_semi"))
-    val isolated = vertices.join(connected, Seq("v"), "left_anti")
-    val nVerts = connected.count()
+    val resumed = store.flatMap(_.latest())
+    // The starting vector (v, oldLabel, mngp, label) over the connected
+    // vertices. Isolated vertices are their own component by construction
+    // and can never change label — iterating over them only pads every
+    // per-round table AND keeps the live-label count pinned above the
+    // broadcast ceiling (on RMAT/web graphs a third of the id space is
+    // isolated, so without this the hooks/label-map tables never become
+    // broadcastable). oldLabel = ~label, so every vertex counts as changed
+    // and the first mngp maintenance below is the full SpMV; mngp starts at
+    // the vertex's own label, which never undercuts it in a hook. Its
+    // checkpoint also counts the vertices: no job of its own.
+    val (start, stats) = IdRange.observed((resumed match {
+      case Some(s) => store.get.load(edges.sparkSession, s)
+      case None => vertices.join(e.select(col("src").as("v")), Seq("v"), "left_semi")
+        .select(col("v"), col("v").as("label"))
+    }).select(col("v"), bitwise_not(col("label")).as("oldLabel"),
+      col("label").as("mngp"), col("label")), "v")
+    val connected = cp(start)
+    val nVerts = stats()._1
     val bcast = nVerts < broadcastMax
     // The broadcast path reads the caller's edge cache when there is one.
     val eP = cp.cache(if (!bcast) e.repartition(col("src")) else e)
     // Stored edges, a snapshot metric only.
     lazy val nnz = eP.count()
-    val resumed = store.flatMap(_.latest())
-    val f0 = resumed match {
-      case Some(s) => cp(store.get.load(edges.sparkSession, s))
-      case None =>
-        val init = cp(connected.select(col("v"), col("v").as("label")))
-        store.foreach(_.commit(init, 0, nnz, 0L))
-        init
-    }
-    // The loop state fuses the label vector with the maintained
-    // neighbor-min: (v, label, mngp) where mngp(v) = min over neighbors u
-    // of label(u). Built with ONE full SpMV here; every round after merges
-    // only the changed vertices' new labels in (labels are monotone
-    // non-increasing, so the min can never need un-doing). Every connected
-    // vertex has an in-neighbor (edges are symmetric), so the coalesce
-    // never actually fires — it is belt-and-braces for degenerate inputs.
-    val mngp0 = SpMV(eP, f0.select(col("v"), col("label").as("xv")),
-        Select2ndMin, broadcastX = bcast)
-      .select(col("v"), col("yv").as("mngp"))
-    var state = cp(f0.join(mngp0, Seq("v"), "left")
-      .select(col("v"), col("label"),
-        coalesce(col("mngp"), col("label")).as("mngp")))
-    cp.free(f0)
+    if (resumed.isEmpty) store.foreach(_.commit(connected.select(col("v"), col("label")), 0, nnz, 0L))
     // The live-label count only gates the small-table broadcasts and
     // never grows, so it is counted (one scan) only while it is at or
     // above SmallMax. A run resumed at convergence runs one more round, a
@@ -156,82 +153,83 @@ object ConnectedComponents {
     def liveLabels: Seq[Column] =
       if (labelCount < SmallMax) Nil else Seq(count_distinct(col("label")))
     if (resumed.nonEmpty && liveLabels.nonEmpty)
-      labelCount = state.agg(liveLabels.head).first().getLong(0)
-    var changed = true
+      labelCount = connected.agg(liveLabels.head).first().getLong(0)
+    def small(df: DataFrame): DataFrame =
+      if (labelCount < SmallMax) broadcast(df) else df
+    // (v, oldLabel, mngp, label) → (v, label, mngp): the neighbor-min mngp
+    // (v) = min over neighbors u of label(u), maintained from the vertices
+    // whose label changed (labels are monotone non-increasing, so the min
+    // never needs un-doing). The join streams the cached edge table once
+    // (sequential probe against the changed build side — never a
+    // re-shuffle of the edges) and the aggregate sees only
+    // O(Σ deg(changed)) rows. On the shuffle path deltas is checkpointed
+    // so its ROW COUNT (≤ Σ deg(changed) distinct dsts — nChanged alone
+    // does not bound it through hubs) can pick broadcast vs shuffle for
+    // the state merge for free; the broadcast path always broadcasts it.
+    def maintain(next: DataFrame, nChanged: Long): DataFrame = {
+      val chg = next.filter(col("label") =!= col("oldLabel"))
+        .select(col("v").as("cv"), col("label").as("clabel"))
+      val chgJ = if (bcast || nChanged < SmallMax) broadcast(chg)
+                 else chg.hint("shuffle_hash")
+      val deltas = eP.join(chgJ, eP("src") === col("cv"))
+        .groupBy(eP("dst").as("v")).agg(min(col("clabel")).as("d"))
+      val dJ = if (bcast) broadcast(deltas) else {
+        val dc = cp(deltas)
+        if (dc.count() < SmallMax) broadcast(dc) else dc.hint("shuffle_hash")
+      }
+      cp(next.join(dJ, Seq("v"), "left")
+        .select(col("v"), col("label"),
+          least(col("mngp"), coalesce(col("d"), col("mngp"))).as("mngp")))
+    }
+    var next = connected
+    var nChanged = nVerts
     var it = resumed.map(_.iteration).getOrElse(0)
     val limit = stopAfter.map(s => math.min(s, maxIters)).getOrElse(maxIters)
-    while (changed && it < limit) {
+    while (nChanged > 0 && it < limit) {
       it += 1
-      def small(df: DataFrame): DataFrame =
-        if (labelCount < SmallMax) broadcast(df) else df
+      val state = maintain(next, nChanged)
+      cp.freeAllExcept(state, eP)
       // 1. hook + spread: candidate per tree, folded back to all members
       //    (mngp comes from the maintained state, no per-round SpMV)
-      val hooks = state.groupBy(col("label")).agg(min(col("mngp")).as("cand"))
-      val hooked = state.join(small(hooks), Seq("label"), "left")
+      val hooks = small(state.groupBy(col("label")).agg(min(col("mngp")).as("cand")))
+      val hooked = state.join(hooks, Seq("label"), "left")
         .select(col("v"), col("label").as("oldLabel"), col("mngp"),
           least(col("label"), col("mngp"),
             coalesce(col("cand"), col("label"))).as("hlabel"))
       // 2. shortcut against the label-restricted map (small after round 1).
       // Post-hook label values are least(label, mngp, cand) — every one a
       // PRE-hook label of some vertex — so the map's domain is exactly
-      // hooks' key set, already computed: no extra n-row distinct needed.
-      val labelMap = hooked.join(small(hooks.select(col("label").as("v"))),
-          Seq("v"), "left_semi")
-        .select(col("v").as("pv"), col("hlabel").as("glabel"))
+      // hooks' key set, already computed: the map joins the same broadcast
+      // hooks table, no extra n-row distinct needed. Reading the label's
+      // own candidate too (the min of the jump target's tree) keeps the
+      // two joins one broadcast; it only hooks further, to a label of the
+      // same component, so labels stay monotone and the fixpoint — the
+      // min id per component — is the same.
+      val labelMap = hooked.join(hooks, hooked("v") === hooks("label"))
+        .select(col("v").as("pv"), least(col("hlabel"), col("cand")).as("glabel"))
       // (A second pointer-jump per round was tried and measured SLOWER at
       // scale-22 — the extra materialization outweighs the saved rounds.)
       // The changed-vertex count decides convergence and gates the
-      // frontier broadcasts below (labelCount is NOT a bound on it: one
+      // frontier broadcasts (labelCount is NOT a bound on it: one
       // surviving label can still mean millions of vertices that just
       // adopted it).
       val dropped = new Observation()
-      val next = cp(hooked.join(small(labelMap), col("hlabel") === col("pv"), "left")
+      next = cp(hooked.join(small(labelMap), col("hlabel") === col("pv"), "left")
         .select(col("v"), col("oldLabel"), col("mngp"),
           coalesce(col("glabel"), col("hlabel")).as("label"))
         .observe(dropped, count(when(col("label") =!= col("oldLabel"), 1)).as("n")))
-      val nChanged = dropped.get("n").asInstanceOf[Long]
+      nChanged = dropped.get("n").asInstanceOf[Long]
       if (liveLabels.nonEmpty) labelCount = next.agg(liveLabels.head).first().getLong(0)
       // 2 flops per stored edge per round: the Select2ndMin compare folded
       // into the maintained mngp merge plus the hook/shortcut min fold.
       store.foreach(_.commit(next.select(col("v"), col("label")), it, nnz, 2L * nnz))
-      changed = nChanged > 0
       cp.free(state)
-      if (changed) {
-        // 3. change-vector mngp maintenance: only edges OUT of vertices
-        // whose label just dropped can lower a neighbor's mngp. The join
-        // streams the cached edge table once (sequential probe against the
-        // changed build side — never a re-shuffle of the edges) and the
-        // aggregate sees only O(Σ deg(changed)) rows. On the shuffle path
-        // deltas is checkpointed so its ROW COUNT (≤ Σ deg(changed)
-        // distinct dsts — nChanged alone does not bound it through hubs)
-        // can pick broadcast vs shuffle for the state merge for free; the
-        // broadcast path always broadcasts it and needs neither.
-        val chg = next.filter(col("label") =!= col("oldLabel"))
-          .select(col("v").as("cv"), col("label").as("clabel"))
-        val chgJ = if (bcast || nChanged < SmallMax) broadcast(chg)
-                   else chg.hint("shuffle_hash")
-        val deltas = eP.join(chgJ, eP("src") === col("cv"))
-          .groupBy(eP("dst").as("v")).agg(min(col("clabel")).as("d"))
-        val dJ = if (bcast) broadcast(deltas) else {
-          val dc = cp(deltas)
-          if (dc.count() < SmallMax) broadcast(dc) else dc.hint("shuffle_hash")
-        }
-        state = cp(next.join(dJ, Seq("v"), "left")
-          .select(col("v"), col("label"),
-            least(col("mngp"), coalesce(col("d"), col("mngp"))).as("mngp")))
-        cp.freeAllExcept(state, connected, eP)
-      } else {
-        state = next
-      }
     }
-    // `isolated` is an anti-join against `connected`, so the final result
-    // still reads the connected frame — keep it and the final state; free
-    // the edge cache and the superseded per-round frames (already freed
-    // in-loop; this catches the initial state when the loop ran zero
-    // rounds).
-    cp.freeAllExcept(state, connected)
-    state.select(col("v"), col("label"))
-      .unionByName(isolated.select(col("v"), col("v").as("label")))
-      .select(col("v").as("vid"), col("label").as("component"))
+    // Only the final labels stay. Every vertex outside them is isolated,
+    // its own component.
+    cp.freeAllExcept(next)
+    val labels = next.select(col("v"), col("label"))
+    vertices.join(if (bcast) broadcast(labels) else labels, Seq("v"), "left")
+      .select(col("v").as("vid"), coalesce(col("label"), col("v")).as("component"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.kernels
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Smallest and largest vertex id of a table; an empty table gives
@@ -25,10 +25,16 @@ object IdRange {
     IdRange(r.getLong(0), r.getLong(1))
   }
 
-  /** [[of]] and the row count of `df`, from the same one job. */
-  def counted(df: DataFrame, cols: String*): (Long, IdRange) = {
-    val r = df.agg(count(lit(1)), bounds(cols): _*).first()
-    (r.getLong(0), IdRange(r.getLong(1), r.getLong(2)))
+  /** `df` observing its row count and [[of]]'s range in the first action
+    * run on it, and a reader of both that waits for that action: no job
+    * and no plan of its own. */
+  def observed(df: DataFrame, cols: String*): (DataFrame, () => (Long, IdRange)) = {
+    val o = new Observation()
+    val Seq(lo, hi) = bounds(cols)
+    (df.observe(o, count(lit(1)).as("n"), lo.as("lo"), hi.as("hi")), { () =>
+      val m = o.get
+      (m("n").asInstanceOf[Long], IdRange(m("lo").asInstanceOf[Long], m("hi").asInstanceOf[Long]))
+    })
   }
 
   private def bounds(cols: Seq[String]): Seq[Column] = {

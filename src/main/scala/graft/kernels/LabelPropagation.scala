@@ -14,17 +14,21 @@ import org.apache.spark.sql.functions._
   * unspecified order — so we PIN the deterministic tiebreak
   * (max count, then min label) and encode the same rule in the oracle.
   *
-  * Scale design: the edge table is persisted ONCE (pre-partitioned by src
-  * in the shuffle-join regime) — per round only the label vector moves.
-  * Setup is one scan of the vertex list (count and id range); the edge
-  * cache fills inside round 1, and the edge count runs only for a
-  * snapshot store (nnz is a snapshot metric).
-  * The count-then-argmax is two hash aggregates, both map-side combinable:
-  * the argmax is a struct-max (count, −label) — lexicographic struct
-  * ordering implements the pinned tiebreak with partial aggregation, where
-  * a row_number window would force a per-vertex sort instead. A fixed
-  * round count keeps the result well-defined (synchronous LP may
-  * oscillate).
+  * Scale design: the edge table is persisted ONCE — partitioned by dst in
+  * the broadcast regime, so the round's join and both aggregates (keyed by
+  * dst) run in one stage with no exchange, and by src in the shuffle-join
+  * regime, so only the label vector moves. Setup is the checkpoint of the
+  * starting vector, whose observed metrics give the vertex count and id
+  * range; the edge cache fills inside round 1, and the edge count runs
+  * only for a snapshot store (nnz is a snapshot metric).
+  * The count-then-argmax is two aggregates, both partially combinable:
+  * the argmax is the max of one key that orders by (count, −label). On
+  * the int-id path that key is a packed long, (count << 32) |
+  * (Int.MaxValue − label), which a hash aggregate maxes; ids of 2^31 and
+  * above keep the struct (count, −label), whose lexicographic order is the
+  * same rule but plans a sort-based aggregate. A row_number window would
+  * force a per-vertex sort instead. A fixed round count keeps the result
+  * well-defined (synchronous LP may oscillate).
   */
 object LabelPropagation {
 
@@ -56,32 +60,45 @@ object LabelPropagation {
                  store: Option[graft.checkpoint.SnapshotStore],
                  stopAfter: Option[Int]): DataFrame = {
     val cp = new graft.util.Checkpoints(edges.sparkSession)
-    // One scan of the vertex list sizes the broadcast and the id width.
-    // Edge endpoints are vertices, so the vertex ids bound the edge ids
-    // and every label: both are cast to the same width below.
-    val (n, ids) = IdRange.counted(vertices, "v")
+    val resumed = store.flatMap(_.latest())
+    // The checkpoint of the starting vector also counts the vertices and
+    // bounds their ids, which size the broadcast and the id width. Edge
+    // endpoints are vertices, so the vertex ids bound the edge ids and
+    // every label: both are cast to the same width below.
+    val (start, stats) = IdRange.observed(resumed match {
+      case Some(s) => store.get.load(edges.sparkSession, s)
+      case None => vertices.select(col("v"), col("v").as("label"))
+    }, "v")
+    var labels = cp(start)
+    val (n, ids) = stats()
     val bcast = n < broadcastMax
     // Int-pack the persisted edge cache when ids fit 2^31: the per-round
-    // join + double aggregate streams this table, and it is DRAM-bound at
-    // scale — 8 bytes/edge instead of 16. The label vector is projected to
-    // the same width before the join (cast on the edge side would break
-    // reuse of the build-once src partitioning); counts and the struct-max
-    // tiebreak are exact integer ops at either width, so results are
-    // identical.
+    // join + aggregate streams this table, and it is DRAM-bound at scale —
+    // 8 bytes/edge instead of 16. The label vector is projected to the
+    // same width before the join (cast on the edge side would break reuse
+    // of the build-once partitioning); counts and the argmax key are exact
+    // integer ops at either width, so results are identical.
     val idType = if (ids.fitsInt) "int" else "bigint"
     val ePacked = edges.select(col("src").cast(idType).as("src"),
       col("dst").cast(idType).as("dst"))
-    val e = (if (bcast) ePacked else ePacked.repartition(col("src"))).persist()
+    // Broadcast regime: partitioned by dst, so both per-round aggregates
+    // (keyed by dst) run in the join's own stage with no exchange.
+    // Shuffle regime: partitioned by src, so only the labels move.
+    val e = ePacked.repartition(col(if (bcast) "dst" else "src")).persist()
     // Stored edges, a snapshot metric only.
     lazy val nnz = e.count()
-    val resumed = store.flatMap(_.latest())
-    var labels = resumed match {
-      case Some(s) => cp(store.get.load(edges.sparkSession, s))
-      case None =>
-        val init = cp(vertices.select(col("v"), col("v").as("label")))
-        store.foreach(_.commit(init, 0, nnz, 0L))
-        init
-    }
+    if (resumed.isEmpty) store.foreach(_.commit(labels, 0, nnz, 0L))
+    // argmax-count with (max c, min label) tiebreak as the max of one key.
+    // Int ids: the count in the high 32 bits above Int.MaxValue − label
+    // (≥ 1, as every int-path id is below Int.MaxValue), a long that a
+    // hash aggregate maxes. Wider ids: the struct (c, −label) — labels are
+    // nonneg vertex ids and structs order lexicographically.
+    val (argmaxKey, labelOf) =
+      if (ids.fitsInt) {
+        val low = lit(Int.MaxValue.toLong)
+        (shiftleft(col("c"), 32).bitwiseOR(low - col("label")),
+          low - col("m").bitwiseAND(lit(0xffffffffL)))
+      } else (struct(col("c"), (-col("label")).as("nl")), -col("m.nl"))
     val from = resumed.map(_.iteration).getOrElse(0)
     val limit = stopAfter.map(s => math.min(s, rounds)).getOrElse(rounds)
     for (round <- from + 1 to limit) {
@@ -90,17 +107,13 @@ object LabelPropagation {
       val counts = e.join(if (bcast) broadcast(lbl) else lbl.hint("shuffle_hash"), Seq("src"))
         .groupBy(col("dst").as("v"), col("label"))
         .agg(count(lit(1)).as("c"))
-      // argmax-count with (max c, min label) tiebreak: labels are nonneg
-      // vertex ids, so max over (c, −label) structs picks it exactly
-      val best = counts.groupBy("v")
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-        .select(col("v").cast("long").as("v"),
-          (-col("m.nl")).cast("long").as("newLabel"))
+      val best = counts.groupBy("v").agg(max(argmaxKey).as("m"))
+        .select(col("v").cast("long").as("v"), labelOf.cast("long").as("newLabel"))
       val prev = labels
-      labels = cp(labels.join(best, Seq("v"), "left")
+      labels = cp(labels.join(if (bcast) broadcast(best) else best, Seq("v"), "left")
         .select(col("v"), coalesce(col("newLabel"), col("label")).as("label")))
       // 2 flops per stored edge per round: the count accumulate plus the
-      // argmax struct-max compare.
+      // argmax compare.
       store.foreach(_.commit(labels, round, nnz, 2L * nnz))
       cp.free(prev)
     }

@@ -1,7 +1,7 @@
 package graft.kernels
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.linalg.MatrixBlock
 
@@ -72,32 +72,48 @@ object PageRankArray {
   def run(edges: DataFrame, vertices: DataFrame, iters: Int = 10,
           d: Double = 0.85, blockSize: Int = 65536,
           colSplits: Int = 2): DataFrame = {
-    val spark = edges.sparkSession
-    val ids = IdRange.of(vertices, "v").union(IdRange.of(edges, "src", "dst"))
-    val maxId = ids.max
-    require(ids.min >= 0, "array path requires non-negative ids")
-    require(maxId >= 0 && maxId + 1 <= Int.MaxValue.toLong,
-      "array path requires V < 2^31")
-    val n = vertices.count()
+    // The vertex ids, collected once on the driver, give the vertex count
+    // and their id range; the edges' largest id is read off the persisted
+    // blocks, whose build already rejects negative ids.
+    val (verts, vs) = vertexIds(vertices)
+    require(vs.forall(_ >= 0), "array path requires non-negative ids")
     BlockStep.persisted(buildBlocks(edges, blockSize, colSplits)) { blocks =>
-      runOn(spark, blocks, vertices, (maxId + 1).toInt, n, iters, d, blockSize)
+      val maxId = blocks.map(_.maxId(blockSize))
+        .fold(if (vs.isEmpty) -1L else vs.max)(math.max)
+      require(maxId >= 0 && maxId + 1 <= Int.MaxValue.toLong,
+        "array path requires V < 2^31")
+      iterate(blocks, verts, vs, (maxId + 1).toInt, vs.length.toLong, iters, d, blockSize)
     }
+  }
+
+  private def vertexIds(vertices: DataFrame): (Dataset[Long], Array[Long]) = {
+    val spark = vertices.sparkSession
+    import spark.implicits._
+    val verts = vertices.select(col("v").cast("long")).as[Long]
+    (verts, verts.collect())
   }
 
   /** Iterations over pre-built persisted blocks (bench kernel-2 boundary).
     * @param nIds  size of the id space (maxId + 1)
     * @param nVerts |vertices| — the PageRank n in the teleport formula */
-  def runOn(spark: SparkSession, blocks: RDD[MatrixBlock], vertices: DataFrame,
+  def runOn(blocks: RDD[MatrixBlock], vertices: DataFrame,
             nIds: Int, nVerts: Long, iters: Int, d: Double,
             blockSize: Int): DataFrame = {
-    val sc = spark.sparkContext
+    val (verts, vs) = vertexIds(vertices)
+    iterate(blocks, verts, vs, nIds, nVerts, iters, d, blockSize)
+  }
+
+  private def iterate(blocks: RDD[MatrixBlock], verts: Dataset[Long], vs: Array[Long],
+                      nIds: Int, nVerts: Long, iters: Int, d: Double,
+                      blockSize: Int): DataFrame = {
+    val spark = verts.sparkSession
     import spark.implicits._
+    val sc = spark.sparkContext
     val bs = blockSize
-    val verts = vertices.select(col("v").cast("long")).as[Long]
     var pr = new Array[Double](nIds)
     // init 1/n on actual vertices only (id space may be sparse)
     val isVertex = new Array[Boolean](nIds)
-    verts.collect().foreach(v => isVertex(v.toInt) = true)
+    vs.foreach(v => isVertex(v.toInt) = true)
     val init = 1.0 / nVerts
     var v0 = 0
     while (v0 < nIds) { if (isVertex(v0)) pr(v0) = init; v0 += 1 }

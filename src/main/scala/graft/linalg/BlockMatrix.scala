@@ -10,6 +10,15 @@ trait CsrBlock {
   def colBlock: Int
   def rowPtr: Array[Int]
   def colIdx: Array[Int]
+
+  /** The largest vertex id stored here, as a row (dst) or a column
+    * (src) of a `blockSize` block; -1 for an empty block. */
+  def maxId(blockSize: Int): Long = {
+    var r = rowPtr.length - 2
+    while (r >= 0 && rowPtr(r + 1) == rowPtr(r)) r -= 1
+    if (r < 0) -1L
+    else math.max(rowBlock.toLong * blockSize + r, colBlock.toLong * blockSize + colIdx.max)
+  }
 }
 
 /** One 2D block of the sparse adjacency matrix, CSR over the block's local

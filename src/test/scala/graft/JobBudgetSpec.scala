@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.TestBus
+import org.apache.spark.{TestBus, TestCodegen}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -10,13 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.checkpoint.SnapshotStore
 import graft.kernels.{ConnectedComponents, LabelPropagation, PageRank}
 
-/** Upper bounds on the Spark jobs one relational kernel call runs on a
-  * fixed graph. A kernel's fixed cost per call is mostly its setup
-  * actions, and at small and medium sizes that cost is most of its time,
-  * so a new count or checkpoint in setup shows here first. Each call runs
-  * under its own job group and only that group's jobs are counted.
-  * Generated-class compiles are logged, not asserted: the codegen cache is
-  * JVM-wide, so they depend on which specs ran before. */
+/** Upper bounds on the Spark jobs and the generated-class compiles one
+  * relational kernel call runs on a fixed graph. A kernel's fixed cost per
+  * call is mostly its setup actions and the classes its plans compile, and
+  * at small and medium sizes that cost is most of its time, so a new count,
+  * checkpoint or distinct plan shows here first. Each call runs under its
+  * own job group and only that group's jobs are counted. Compiles are
+  * counted from an emptied codegen cache: the cache is JVM-wide, so
+  * without that the count would depend on which specs ran before. Every
+  * distinct whole-stage plan compiles twice, once on the driver and once
+  * under the executor's class loader. */
 class JobBudgetSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -38,12 +41,14 @@ class JobBudgetSpec extends AnyFunSuite {
         jobs.incrementAndGet()
   }
 
-  /** Jobs run by `call` and the collect of its result. */
-  private def jobsOf(name: String)(call: => DataFrame): Int = {
+  /** Jobs and generated-class compiles of `call` and the collect of its
+    * result. */
+  private def costOf(name: String)(call: => DataFrame): (Int, Long) = {
     val sc = spark.sparkContext
     val group = s"job-budget-$name"
     val listener = new GroupJobs(group)
     sc.addSparkListener(listener)
+    TestCodegen.clearCache()
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     sc.setJobGroup(group, name, interruptOnCancel = false)
     try call.collect()
@@ -52,29 +57,33 @@ class JobBudgetSpec extends AnyFunSuite {
     sc.removeSparkListener(listener)
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     info(s"$name: ${listener.jobs.get} jobs, $compiles generated-class compiles")
-    listener.jobs.get
+    (listener.jobs.get, compiles)
   }
 
   private def store(): SnapshotStore =
     new SnapshotStore(Files.createTempDirectory("graft-budget").toString)
 
   test("PageRank.run (2 iterations) stays within its job budget") {
-    val n = jobsOf("pagerank")(PageRank.run(e, v, iters = 2))
-    assert(n <= 20, s"PageRank.run ran $n jobs")
+    val (n, c) = costOf("pagerank")(PageRank.run(e, v, iters = 2))
+    assert(n <= 16, s"PageRank.run ran $n jobs")
+    assert(c <= 42, s"PageRank.run compiled $c classes")
   }
 
   test("PageRank.resumable (2 iterations) stays within its job budget") {
-    val n = jobsOf("pagerank-resumable")(PageRank.resumable(e, v, store(), iters = 2))
-    assert(n <= 26, s"PageRank.resumable ran $n jobs")
+    val (n, c) = costOf("pagerank-resumable")(PageRank.resumable(e, v, store(), iters = 2))
+    assert(n <= 19, s"PageRank.resumable ran $n jobs")
+    assert(c <= 41, s"PageRank.resumable compiled $c classes")
   }
 
   test("relational ConnectedComponents.run stays within its job budget") {
-    val n = jobsOf("cc")(ConnectedComponents.run(e, v, arrayMax = 0L))
-    assert(n <= 49, s"ConnectedComponents.run ran $n jobs")
+    val (n, c) = costOf("cc")(ConnectedComponents.run(e, v, arrayMax = 0L))
+    assert(n <= 37, s"ConnectedComponents.run ran $n jobs")
+    assert(c <= 34, s"ConnectedComponents.run compiled $c classes")
   }
 
   test("LabelPropagation.run (1 round) stays within its job budget") {
-    val n = jobsOf("labelprop")(LabelPropagation.run(e, v, rounds = 1))
-    assert(n <= 11, s"LabelPropagation.run ran $n jobs")
+    val (n, c) = costOf("labelprop")(LabelPropagation.run(e, v, rounds = 1))
+    assert(n <= 7, s"LabelPropagation.run ran $n jobs")
+    assert(c <= 22, s"LabelPropagation.run compiled $c classes")
   }
 }
