@@ -10,18 +10,18 @@ import org.apache.spark.sql.functions._
   *
   * vid = global rank of the key in lexicographic order (dense 0..V-1,
   * deterministic, parallelism-independent), computed by [[Ranking]]'s
-  * two-phase range-partitioned rank — no global single-partition window,
-  * so the encoding survives 10^12 keys. The result does not depend on the
-  * sampled range boundaries: the global rank of a distinct key is invariant
-  * to where partitions split.
+  * range-partitioned rank — no global single-partition window, so the
+  * encoding survives 10^12 keys. Repeated keys sort next to each other in
+  * one range partition, where the numbering skips them: no distinct
+  * aggregate runs first, so the range exchange's sampling job and its
+  * shuffle each compute `keys` (cache an expensive key plan around the
+  * call). The ranks do not depend on the sampled range boundaries: a
+  * distinct key's global rank is invariant to where partitions split.
   */
 object Dictionary {
 
   /** @param keys single-column DataFrame of (possibly duplicated) keys
     * @return (keyCol: string, vid: long), one row per distinct key */
-  def encode(keys: DataFrame, keyCol: String = "url", parts: Int = 0): DataFrame = {
-    val distinctKeys = keys.select(col(keyCol).as("key")).distinct()
-    Ranking.globalRank(distinctKeys, Seq(col("key")), "vid", parts)
-      .select(col("key").as(keyCol), col("vid"))
-  }
+  def encode(keys: DataFrame, keyCol: String = "url", parts: Int = 0): DataFrame =
+    Ranking.rank(keys.select(col(keyCol)), Seq(col(keyCol)), "vid", parts, distinct = true)
 }

@@ -22,9 +22,11 @@ object WebGraph {
 
   def build(pages: DataFrame): Built = {
     val links = Extract.linkTable(pages)
-    val allUrls = pages.select(col("url"))
-      .union(links.select(col("dstUrl").as("url")))
-    val dict = Dictionary.encode(allUrls, "url").persist()
+    // The dictionary's range sampling job and its shuffle both read the
+    // link targets; cached, the two jobs share one parse of the html.
+    val targets = links.select(col("dstUrl").as("url")).persist()
+    val dict = try Dictionary.encode(pages.select(col("url")).union(targets), "url").persist()
+      finally targets.unpersist(false)
     val bySrc = dict.withColumnRenamed("url", "srcUrl").withColumnRenamed("vid", "src")
     val byDst = dict.withColumnRenamed("url", "dstUrl").withColumnRenamed("vid", "dst")
     val edges = links

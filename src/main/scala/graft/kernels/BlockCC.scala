@@ -55,7 +55,8 @@ object BlockCC {
       Seq(col("rb"), pmod(col("cb"), lit(colSplits))))
 
   /** @param edges symmetric (src, dst), dense non-negative vids ≤ maxId
-    * @param vertices (v) — output carries exactly these rows
+    * @param vertices (v) — output carries exactly these rows; one outside
+    *        0..maxId has no edge and is its own component
     * @return (vid, component) — component = min vid of the component */
   def run(edges: DataFrame, vertices: DataFrame, maxId: Long,
           blockSize: Int = 65536, maxIters: Int = 50): DataFrame = {
@@ -141,6 +142,7 @@ object BlockCC {
 
     lastRounds = it
     BlockStep.toFrame(vertices.select(col("v").cast("long")).as[Long], f,
-      "vid", "component")((lab, ids) => ids.map(v => (v, lab(v.toInt).toLong)))
+      "vid", "component")((lab, ids) =>
+        ids.map(v => (v, if (v >= 0 && v < lab.length) lab(v.toInt).toLong else v)))
   }
 }

@@ -88,11 +88,12 @@ object ConnectedComponents {
           broadcastMax: Long = BroadcastMax,
           arrayMax: Long = ArrayMax): DataFrame = {
     if (arrayMax > 0) {
-      // Probe min ids too: negative vertex ids are legal on the relational
+      // Probe min ids too: negative edge ids are legal on the relational
       // FastSV path but would mis-bucket in the packed-long block build —
-      // fall through to relational rather than corrupt.
-      val ids = IdRange.of(vertices, "v").union(IdRange.of(edges, "src", "dst"))
-      if (ids.min >= 0 && ids.max >= 0 && ids.max + 1 <= arrayMax)
+      // fall through to relational rather than corrupt. Only the edges'
+      // ids: a vertex outside their range is isolated, its own component.
+      val ids = IdRange.of(edges, "src", "dst")
+      if (ids.min >= 0 && ids.max + 1 <= arrayMax)
         return BlockCC.run(edges, vertices, ids.max, maxIters = maxIters)
     }
     fastsv(edges, vertices, maxIters, broadcastMax, None, None)

@@ -8,9 +8,6 @@ import org.apache.spark.sql.functions._
   * back to the relational path on negative ids, which would mis-bucket in
   * the packed-long block build. */
 final case class IdRange(min: Long, max: Long) {
-  def union(o: IdRange): IdRange =
-    IdRange(math.min(min, o.min), math.max(max, o.max))
-
   /** Every id fits a non-negative Int (int-packed edge caches). */
   def fitsInt: Boolean = min >= 0 && max < Int.MaxValue.toLong
 }

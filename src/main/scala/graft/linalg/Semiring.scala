@@ -45,21 +45,6 @@ object Select2ndMin extends ColumnSemiring {
   def add(c: Column): Column = min(c)
 }
 
-/** (max, select2nd) — BFS-style parent/frontier selection
-  * (reference Semirings.h:165-210 SelectMaxSRing). */
-object Select2ndMax extends ColumnSemiring {
-  val name = "select2nd_max"
-  def multiply(w: Column, x: Column): Column = x
-  def add(c: Column): Column = max(c)
-}
-
-/** (+, select2nd) — unweighted sum of neighbor values (degree-style). */
-object Select2ndPlus extends ColumnSemiring {
-  val name = "select2nd_plus"
-  def multiply(w: Column, x: Column): Column = x
-  def add(c: Column): Column = sum(c)
-}
-
 /** (∨, ∧) — boolean reachability SpGEMM; the tip-removal iteration's
   * semiring (reference ReleaseTests/KTipsTest.cpp:12-18 KTipsSR:
   * add = logical or, multiply = logical and) and the general BoolCopy

@@ -58,7 +58,7 @@ object Plans {
       SpMV(edges, verts.select(col("v"), lit(1.0).as("xv")), PlusTimes,
         broadcastX = true))
 
-    // 4. Triangle masked SpGEMM (lazy replica of Triangles.count's dataflow —
+    // 4. Triangle masked SpGEMM (lazy replica of Triangles.countRelational —
     // the kernel itself materializes eagerly to manage its cache)
     section("Triangle count: wedge join + semi-join mask", {
       "Both the wedge build and the closing mask are `BroadcastHashJoin`s " +

@@ -8,10 +8,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.checkpoint.SnapshotStore
-import graft.kernels.{ConnectedComponents, LabelPropagation, PageRank}
+import graft.graph.WebGraph
+import graft.kernels.{ConnectedComponents, LabelPropagation, PageRank, Triangles}
+import graft.pages.PageGen
 
 /** Upper bounds on the Spark jobs and the generated-class compiles one
-  * relational kernel call runs on a fixed graph. A kernel's fixed cost per
+  * kernel or ingest call runs on a fixed input. A kernel's fixed cost per
   * call is mostly its setup actions and the classes its plans compile, and
   * at small and medium sizes that cost is most of its time, so a new count,
   * checkpoint or distinct plan shows here first. Each call runs under its
@@ -85,5 +87,28 @@ class JobBudgetSpec extends AnyFunSuite {
     val (n, c) = costOf("labelprop")(LabelPropagation.run(e, v, rounds = 1))
     assert(n <= 7, s"LabelPropagation.run ran $n jobs")
     assert(c <= 22, s"LabelPropagation.run compiled $c classes")
+  }
+
+  test("WebGraph.build (edges counted) stays within its job budget") {
+    val pages = PageGen.pages(spark, 200).persist()
+    pages.count()
+    var built: WebGraph.Built = null
+    val (n, c) = costOf("ingest") { built = WebGraph.build(pages); built.edges }
+    built.dict.unpersist(false)
+    pages.unpersist(false)
+    assert(n <= 10, s"WebGraph.build ran $n jobs")
+    assert(c <= 36, s"WebGraph.build compiled $c classes")
+  }
+
+  test("Triangles.count stays within its job budget") {
+    val (n, c) = costOf("tricnt")(Triangles.count(e))
+    assert(n <= 3, s"Triangles.count ran $n jobs")
+    assert(c <= 3, s"Triangles.count compiled $c classes")
+  }
+
+  test("array-path ConnectedComponents.run stays within its job budget") {
+    val (n, c) = costOf("cc-array")(ConnectedComponents.run(e, v))
+    assert(n <= 10, s"ConnectedComponents.run ran $n jobs")
+    assert(c <= 17, s"ConnectedComponents.run compiled $c classes")
   }
 }

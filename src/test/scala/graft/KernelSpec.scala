@@ -70,23 +70,23 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("triangle intersection kernel equals the relational mask plan") {
-    import org.apache.spark.sql.functions._
+    def check(name: String, e: org.apache.spark.sql.DataFrame): Long = {
+      val arr = Triangles.countByIntersection(e)
+      val rel = Triangles.countRelational(e)
+      assert(arr == rel, s"$name: intersection $arr vs relational $rel")
+      arr
+    }
     for (seed <- Seq(2L, 11L)) {
       val pairs = RefKernels.randomGraph(120, 700, seed)
-      val e = undirected(pairs)
-      val deg = e.groupBy(col("src").as("u")).agg(count(lit(1)).as("d"))
-      val l = e
-        .join(deg.select(col("u").as("src"), col("d").as("ds")), "src")
-        .join(deg.select(col("u").as("dst"), col("d").as("dd")), "dst")
-        .where(col("ds") < col("dd") ||
-          (col("ds") === col("dd") && col("src") < col("dst")))
-        .select(col("src").as("a"), col("dst").as("b")).persist()
-      val nL = l.count()
-      val arr = Triangles.countByIntersection(l, nL)
-      val rel = Triangles.countRelational(l, nL)
-      l.unpersist(false)
-      assert(arr == rel, s"seed=$seed: intersection $arr vs relational $rel")
+      check(s"seed=$seed", undirected(pairs))
+      // sparse ids past 2^32: the kernel's dense vertex indexes keep their order
+      val sparse = pairs.map { case (a, b) => (a * 4294967311L + 3L, b * 4294967311L + 3L) }
+      val tc = check(s"seed=$seed sparse", undirected(sparse))
+      assert(tc == RefKernels.triangles((pairs ++ pairs.map(_.swap)).distinct), s"seed=$seed sparse")
     }
+    val s = spark
+    import s.implicits._
+    assert(check("edge-free", Seq.empty[(Long, Long)].toDF("src", "dst")) == 0L)
   }
 
   test("cc finds two components on sevenvertex with min-id labels") {
@@ -111,6 +111,13 @@ class KernelSpec extends AnyFunSuite {
     val arrSmallBlocks = asMap(graft.kernels.BlockCC.run(e, v,
       pairs.flatMap(p => Seq(p._1, p._2)).max, blockSize = 32))
     assert(arrSmallBlocks == rel)
+    // vertices past the edges' id range, or below 0, are their own components
+    val s = spark
+    import s.implicits._
+    val vMore = v.union(Seq(-3L, 5000L).toDF("v"))
+    val arrMore = asMap(ConnectedComponents.run(e, vMore))
+    assert(arrMore == asMap(ConnectedComponents.run(e, vMore, arrayMax = 0L)))
+    assert(arrMore(-3L) == -3L && arrMore(5000L) == 5000L)
     // edge-free graph: every vertex is its own component on every path
     val none = e.limit(0)
     val own = asMap(v.select(v("v"), v("v")))
